@@ -100,7 +100,9 @@ def connected_components(edges_df, src: str = "src", dst: str = "dst",
             F.sum("label"), F.max("label"), F.count("*")
         ).collect()[0]
         label_sum, label_max, n_vertices = probe[0], probe[1], probe[2]
-        if prev_sum is None and label_max * n_vertices >= 2**62:
+        # an empty edge relation has no vertices: max(label) is NULL
+        if (prev_sum is None and label_max is not None
+                and label_max * n_vertices >= 2**62):
             # non-ANSI sum wraps silently; the monotone-stall probe is
             # only exact while sum(label) provably fits int64 (r15
             # ADVICE).  Labels only decrease, so checking the FIRST

@@ -8,14 +8,18 @@ the reference leaves NULL behavior undefined, SURVEY.md §1.1).
 
 Two physical strategies, same observable semantics (property-tested equal):
 
-* **v1 (UDF form)** — an Arrow-batched ``pandas_udf``: per batch, dedup the
-  input strings (the reference keys its result map by input string,
-  ``utils.rs:139``), score each distinct title against a broadcast index,
-  map back.  The index (~4 MB of numpy arrays) is built once on the driver
-  and ``sc.broadcast``-ed — the analogue of the reference's temp-file memo
-  (``utils.rs:122-135``).  This is the default: the matching kernel is
-  vectorized, the KB side is constant-size, and Spark partitions provide
-  the parallelism (the reference's rayon analogue).
+* **v1 (UDF form)** — an Arrow-batched ``pandas_udf`` over a broadcast
+  ``(index, kb)`` pair.  Each Python worker keeps a memo from title to
+  formatted output (the reference keys its result map by input string,
+  ``utils.rs:139``), so a distinct title reaches the matching kernel at
+  most once per worker, across batches, tasks and jobs — not once per
+  batch.  The memo belongs to one broadcast value (a new index starts it
+  empty) and holds at most ``_MEMO_MAX`` titles; past that it is cleared
+  whole.  The index (~4 MB of numpy arrays) is built once on the driver
+  and broadcast once per SparkContext — the analogue of the reference's
+  temp-file memo (``utils.rs:122-135``).  This is the default: the
+  matching kernel is vectorized, the KB side is constant-size, and Spark
+  partitions provide the parallelism (the reference's rayon analogue).
 
 * **v2 (DataFrame form)** — ``standardize_titles_df``: distinct titles ->
   tokenize/stem -> explode to (title, term) -> broadcast-hash-join posting
@@ -29,6 +33,7 @@ from __future__ import annotations
 
 from typing import Iterator, Optional
 
+import numpy as np
 import pandas as pd
 
 from ..functions.tfidf import TfidfIndex, build_index, best_match_indices
@@ -41,7 +46,18 @@ _FALLBACK = "None"  # reference lib.rs:63 — unreachable in practice
 # cache, utils.rs:122-135: build once, reuse forever within the process).
 # ---------------------------------------------------------------------------
 _INDEX: Optional[TfidfIndex] = None
-_UDF_CACHE: dict = {}  # SparkSession -> registered pandas UDF
+# (SparkContext, Broadcast of (index, kb)): one broadcast per live
+# SparkContext, shared by the v1 UDF, the v2 form and the stream.
+_BROADCAST: Optional[tuple] = None
+
+# ---------------------------------------------------------------------------
+# Python-worker singletons: the v1 UDF's memo, title -> formatted output.
+# Spark reuses Python workers across tasks and jobs, and this module's state
+# lives as long as the worker.
+# ---------------------------------------------------------------------------
+_MEMO_MAX = 65536  # titles; the same fixed size as functions/text.py's stem cache
+_MEMO: dict[str, str] = {}
+_MEMO_OWNER = None  # the broadcast (index, kb) value _MEMO was filled from
 
 
 def _arrow_df(spark, pdf):
@@ -64,7 +80,8 @@ def get_index() -> TfidfIndex:
 def match_titles(titles: list[str], index: TfidfIndex | None = None,
                  kb: KnowledgeBase | None = None) -> list[str]:
     """Pure-Python batch matcher (no Spark): the full M0 pipeline for a list
-    of strings.  Used by the pandas UDF per Arrow batch and by unit tests."""
+    of strings.  Used by the pandas UDF on each batch's memo misses and by
+    unit tests."""
     if index is None:
         index = get_index()
     if kb is None:
@@ -88,33 +105,59 @@ def standardize_title_str(title: str) -> str:
 # v1: Arrow-batched pandas UDF over a broadcast index
 # ---------------------------------------------------------------------------
 
+def _broadcast(spark):
+    """The ``(index, kb)`` broadcast of ``spark``'s live SparkContext, made
+    on first use.  Only the latest context is held, so a stopped one is
+    not pinned."""
+    global _BROADCAST
+    sc = spark.sparkContext
+    if _BROADCAST is None or _BROADCAST[0] is not sc or sc._jsc is None:
+        _BROADCAST = (sc, sc.broadcast((get_index(), load_kb())))
+    return _BROADCAST[1]
+
+
+def _standardize_batches(value, batches: Iterator[pd.Series]) -> Iterator[pd.Series]:
+    """The v1 UDF body: standardize each batch through the worker memo.
+
+    A module-level function, so the pickled UDF refers to it by name and
+    every task a worker runs shares this module's ``_MEMO``."""
+    global _MEMO, _MEMO_OWNER
+    index, kb = value
+    for s in batches:
+        if _MEMO_OWNER is not value:
+            _MEMO, _MEMO_OWNER = {}, value
+        memo = _MEMO
+        codes, uniques = pd.factorize(s)  # NULL -> code -1
+        titles = uniques.astype(str).tolist()
+        outs = [memo.get(t) for t in titles]
+        miss = [i for i, o in enumerate(outs) if o is None]
+        if miss:
+            fresh = [titles[i] for i in miss]
+            scored = match_titles(fresh, index, kb)
+            for i, o in zip(miss, scored):
+                outs[i] = o
+            # every output of this batch is read; only now may we evict
+            if len(memo) + len(fresh) > _MEMO_MAX:
+                memo.clear()
+            memo.update(zip(fresh[:_MEMO_MAX], scored))
+        outs.append(None)
+        yield pd.Series(np.array(outs, dtype=object).take(codes),
+                        index=s.index, dtype=object)
+
+
 def make_standardize_udf(spark):
-    """Build the pandas UDF, broadcasting the prebuilt index so every
-    executor python worker deserializes it once (not per batch).  Cached
-    per SparkSession so repeated register() calls reuse one broadcast."""
+    """The v1 pandas UDF over the SparkContext's shared broadcast, so every
+    executor Python worker deserializes the index once (not per batch)
+    and repeated register() calls reuse one broadcast."""
     from pyspark.sql.functions import pandas_udf
     from pyspark.sql.types import StringType
 
-    cached = _UDF_CACHE.get(spark)
-    if cached is not None:
-        return cached
-
-    index = get_index()
-    kb = load_kb()
-    bc = spark.sparkContext.broadcast((index, kb))
+    bc = _broadcast(spark)
 
     @pandas_udf(StringType())
     def standardize_title(batch_iter: Iterator[pd.Series]) -> Iterator[pd.Series]:
-        idx, kb_local = bc.value
-        for s in batch_iter:
-            mask = s.notna()
-            result = pd.Series([None] * len(s), index=s.index, dtype=object)
-            if mask.any():
-                vals = s[mask].astype(str).tolist()
-                result[mask] = match_titles(vals, idx, kb_local)
-            yield result
+        return _standardize_batches(bc.value, batch_iter)
 
-    _UDF_CACHE[spark] = standardize_title
     return standardize_title
 
 
@@ -164,7 +207,7 @@ def standardize_titles_df(spark, df, title_col: str, out_col: str = "standardize
 
     index = get_index()
     kb = load_kb()
-    bc = spark.sparkContext.broadcast(index)
+    bc = _broadcast(spark)
 
     q_schema = ArrayType(
         StructType(
@@ -179,7 +222,7 @@ def standardize_titles_df(spark, df, title_col: str, out_col: str = "standardize
     def q_vectorize(batch_iter: Iterator[pd.Series]) -> Iterator[pd.Series]:
         from ..functions.tfidf import vectorize_query
 
-        idx = bc.value
+        idx = bc.value[0]
         for s in batch_iter:
             out = []
             for title in s:

@@ -31,3 +31,12 @@ def test_components_long_chain_converges(spark):
     }
     assert set(out.values()) == {100}
     assert len(out) == 13
+
+
+def test_components_empty_edge_relation(spark):
+    # a zero-row edge relation has no vertices: the convergence probe's
+    # max(label) is NULL, and the int64 bound check must not multiply it
+    empty = spark.sql("SELECT CAST(1 AS BIGINT) AS src, CAST(2 AS BIGINT) AS dst").where("false")
+    out = connected_components(empty)
+    assert out.columns == ["vertex", "component"]
+    assert out.collect() == []
