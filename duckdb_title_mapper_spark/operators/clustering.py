@@ -10,7 +10,7 @@ Shape per iteration — the one that scales to 100 TB:
   executors inside the plan (literal array-of-structs for the SQL
   kernel, closure constants for the Arrow kernel), so the assignment is
   MAP-SIDE ONLY: argmin by squared L2 with ties to the lowest centroid
-  id (same contract as the x_kmeans_step oracle), no join, no shuffle,
+  id (same contract as the x_kmeans_step_i oracle), no join, no shuffle,
   the big side never moves.  The default Arrow/numpy kernel accumulates
   dimension-sequentially, so its doubles are bit-identical to the SQL
   higher-order-function kernel (kernel parity is test-locked).
@@ -114,7 +114,7 @@ def kmeans_lloyd(spark, df, vec_col: str = "embedding", k: int = 16,
     """Fit k-means; returns (assignments DataFrame, centroids, inertias).
 
     Seeds are the first k rows in ascending order of the first column
-    (deterministic, matching the x_kmeans_step oracle's ``vec_id < k``
+    (deterministic, matching the x_kmeans_step_i oracle's ``vec_id < k``
     seeds when called on the embeddings table)."""
     from pyspark.sql import functions as F
 

@@ -12,7 +12,7 @@ lands every row on one reducer.  Salting fixes the key itself:
 
 The dim side grows ``buckets``×, which is the explicit trade: use for
 small/medium dims against skewed facts.  Result set is exactly the plain
-join's (oracle-checked by ``rel_salted_join``).
+join's (oracle-checked by ``rel_salted_join_i``).
 """
 
 from __future__ import annotations

@@ -27,7 +27,7 @@ SFS = ["/root/testdata/sf0.001", "/root/testdata/sf0.01", "/root/testdata/sf0.1"
 # Module-level so tests/test_grade_order.py can lock it against
 # bench.EXTRA (the docs promise the lists stay in sync — VERDICT r3 #7).
 EXTRA = [
-    "x_sessionize_batch", "x_runlength_events", "x_ohlc_resample",
+    "x_sessionize_batch_i", "x_runlength_events", "x_ohlc_resample",
     "x_token_chunks", "x_chunk_dedup", "x_ngram_repetition",
     "x_sequence_packing", "x_jaro_winkler_pairs", "x_triangle_count",
     "rel_merge_upsert", "rel_latest_per_key", "x_dedup_pipeline",
@@ -44,7 +44,7 @@ EXTRA = [
     # round-3 curation reports + ANN/streaming variants
     "x_dedup_survivorship", "x_dedup_report", "x_dup_ratio_by_source",
     "x_contamination_by_split", "x_ann_lsh_multiprobe",
-    "stream_ohlc_windows", "x_length_histogram", "rel_group_by_all",
+    "stream_ohlc_windows", "x_length_histogram", "rel_group_by_all_i",
     # round-4 flagships
     "x_semantic_dedup_scaled", "x_bm25_topk", "x_winnow_fingerprints",
     "x_gopher_rules", "x_tokenizer_fertility", "stream_content_dedup",

@@ -24,7 +24,7 @@ def test_inertia_non_increasing(spark, emb):
 
 def test_first_assignment_matches_sql_step(spark, emb):
     """Round-1 assignment (seed centroids = first k vectors) must agree
-    with the x_kmeans_step oracle's assign CTE on membership counts."""
+    with the x_kmeans_step_i oracle's assign CTE on membership counts."""
     from pyspark.sql import functions as F
 
     from duckdb_title_mapper_spark.operators.clustering import (

@@ -82,15 +82,12 @@ def test_registered_fn_names_match_query_names():
     @_q decorator and its def silently rebinds the decorator to the
     NEXT function (src_table_log_time_travel briefly registered
     _zorder_pruning_sql as its spark_fn).  Every registered query's
-    function name must equal its registration name; the one
-    historical exception is pinned."""
+    function name must equal its registration name."""
     from duckdb_title_mapper_spark.workload import all_queries
 
-    exceptions = {"rel_time_hourly": "_rel_time_hourly_spark"}
     bad = {
         n: q.spark_fn.__name__
         for n, q in all_queries().items()
         if q.spark_fn.__name__ != n
-        and exceptions.get(n) != q.spark_fn.__name__
     }
     assert not bad, bad

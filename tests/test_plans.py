@@ -79,7 +79,7 @@ def test_declared_queries_plan_shapes(spark):
     from duckdb_title_mapper_spark.workload import core_queries as all_queries
 
     qs = all_queries()
-    join_dims = qs["rel_join_dims"].spark_fn(spark, SF)
+    join_dims = qs["rel_join_dims_i"].spark_fn(spark, SF)
     assert broadcast_join_count(join_dims) >= 1
 
     thr = qs["std_documents_throughput"].spark_fn(spark, SF)
@@ -117,7 +117,7 @@ def test_round2_scale_claims_hold_in_plans(spark):
     assert "Window" not in txt, txt[:800]
 
     # PMI: the two unigram join sides are small aggregates -> broadcast
-    pmi = qs["x_collocation_pmi"].spark_fn(spark, SF)
+    pmi = qs["x_collocation_pmi_i"].spark_fn(spark, SF)
     assert broadcast_join_count(pmi) >= 2, explain_str(pmi)[:800]
 
 
