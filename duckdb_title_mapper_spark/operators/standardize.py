@@ -21,12 +21,13 @@ Two physical strategies, same observable semantics (property-tested equal):
   matching kernel is vectorized, the KB side is constant-size, and Spark
   partitions provide the parallelism (the reference's rayon analogue).
 
-* **v2 (DataFrame form)** — ``standardize_titles_df``: distinct titles ->
-  tokenize/stem -> explode to (title, term) -> broadcast-hash-join posting
-  lists -> partial-product groupBy -> window argmax with
-  ``(desc(score), asc(doc_idx))`` (exactly M6's tie-break) -> re-join.
-  Fully Catalyst-visible, so filters/pruning push through; use it when the
-  title column is a large fraction of the data and global dedup pays.
+* **v2 (DataFrame form)** — ``standardize_titles_df``: distinct non-NULL
+  titles -> ``mapInPandas`` through the v1 body (same broadcast, same
+  worker memo, same kernel) -> left join back on the title.  The
+  ``distinct`` is the only per-title shuffle, so the title set crosses
+  the network once however often titles repeat; use it when the title
+  column is a large fraction of the data and global dedup pays.  Scoring
+  is a Python node, opaque to Catalyst (SCALING.md states the trade).
 """
 
 from __future__ import annotations
@@ -162,177 +163,35 @@ def make_standardize_udf(spark):
 
 
 # ---------------------------------------------------------------------------
-# v2: pure-DataFrame posting-list join form (SURVEY.md §4.3)
+# v2: distinct -> v1 body -> join
 # ---------------------------------------------------------------------------
 
-def kb_posting_lists_df(spark):
-    """The broadcast doc side: one row per (term_idx, doc_idx, weight).
-
-    Built from the index's numpy arrays through Arrow (a plain-list
-    ``createDataFrame`` would plan a Python-RDD source that re-pays a
-    non-Arrow worker chain on every downstream action)."""
-    import numpy as np
-    import pandas as pd
-
-    index = get_index()
-    counts = np.diff(index.term_ptr)
-    pdf = pd.DataFrame(
-        {
-            "term_idx": np.repeat(
-                np.arange(index.num_terms, dtype=np.int32), counts
-            ),
-            "doc_idx": index.post_doc.astype(np.int32),
-            "d_weight": index.post_weight,
-        }
-    )
-    prev = spark.conf.get("spark.sql.execution.arrow.pyspark.enabled", "false")
-    spark.conf.set("spark.sql.execution.arrow.pyspark.enabled", "true")
-    try:
-        return spark.createDataFrame(pdf)
-    finally:
-        spark.conf.set("spark.sql.execution.arrow.pyspark.enabled", prev)
-
-
 def standardize_titles_df(spark, df, title_col: str, out_col: str = "standardized_title"):
-    """DataFrame-native standardize: adds ``out_col`` to ``df``.
+    """DataFrame form of standardize: adds ``out_col`` to ``df``.
 
-    distinct -> stem/explode (python only for the stemmer) -> broadcast join
-    postings -> groupBy dot product -> aggregate argmax via
-    max(struct(score, -doc_idx)) (ties -> asc(doc_idx), reproducing
-    utils.rs:169-191) -> OOV coalesce to corpus[0] -> re-join.
-    """
+    distinct non-NULL titles -> ``mapInPandas`` through the v1 body
+    (:func:`_standardize_batches` on the shared broadcast, so the same
+    worker memo) -> left join back on the title.  The ``distinct`` is the
+    only per-title exchange; NULL titles find no match and stay NULL."""
     from pyspark.sql import functions as F
-    from pyspark.sql.functions import pandas_udf
-    from pyspark.sql.types import ArrayType, DoubleType, LongType, StructField, StructType
+    from pyspark.sql.types import StringType, StructField, StructType
 
-    index = get_index()
-    kb = load_kb()
     bc = _broadcast(spark)
 
-    q_schema = ArrayType(
-        StructType(
-            [
-                StructField("term_idx", LongType()),
-                StructField("q_weight", DoubleType()),
-            ]
-        )
-    )
+    def score(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            titles = pdf["__title"]
+            (out,) = _standardize_batches(bc.value, [titles])
+            yield pd.DataFrame({"__title": titles, out_col: out})
 
-    @pandas_udf(q_schema)
-    def q_vectorize(batch_iter: Iterator[pd.Series]) -> Iterator[pd.Series]:
-        from ..functions.tfidf import vectorize_query
-
-        idx = bc.value[0]
-        for s in batch_iter:
-            out = []
-            for title in s:
-                if title is None:
-                    out.append([])
-                    continue
-                tidxs, weights, qnorm = vectorize_query(idx, str(title))
-                if qnorm <= 0.0:
-                    out.append([])
-                else:
-                    out.append(
-                        [
-                            {"term_idx": int(t), "q_weight": float(w) / qnorm}
-                            for t, w in zip(tidxs, weights)
-                        ]
-                    )
-            yield pd.Series(out)
-
-    titles = (
+    schema = StructType([StructField("__title", StringType()),
+                         StructField(out_col, StringType())])
+    title_to_out = (
         df.select(F.col(title_col).alias("__title"))
         .where(F.col("__title").isNotNull())
         .distinct()
-        # materialize the (small, deduplicated) title set once: it feeds
-        # BOTH the scoring path and the OOV left-join base, and without
-        # this each consumer re-scans the full source to recompute the
-        # distinct — 3 source scans instead of 2 at 100 TB.  Mechanism is
-        # deployment-selected (localCheckpoint on local[N], lineage-keeping
-        # persist on clusters) via plans.materialize.
+        .mapInPandas(score, schema)
     )
-    from ..plans.materialize import materialize as _mat
-
-    titles = _mat(titles)
-
-    q = titles.withColumn("__qvec", q_vectorize(F.col("__title")))
-    q_terms = q.select(
-        "__title", F.explode_outer("__qvec").alias("__t")
-    ).select(
-        "__title",
-        F.col("__t.term_idx").alias("term_idx"),
-        F.col("__t.q_weight").alias("q_weight"),
-    )
-
-    import numpy as np
-
-    postings = F.broadcast(kb_posting_lists_df(spark))
-    norms_df = F.broadcast(
-        _arrow_df(
-            spark,
-            pd.DataFrame(
-                {
-                    "doc_idx": np.arange(index.num_docs, dtype=np.int32),
-                    "doc_norm": index.doc_norms,
-                }
-            ),
-        )
-    )
-
-    dots = (
-        q_terms.join(postings, "term_idx")
-        .groupBy("__title", "doc_idx")
-        .agg(F.sum(F.col("q_weight") * F.col("d_weight")).alias("dot"))
-        .join(norms_df, "doc_idx")
-        .withColumn(
-            "score",
-            F.when(F.col("doc_norm") > 0.0, F.col("dot") / F.col("doc_norm")).otherwise(
-                F.lit(0.0)
-            ),
-        )
-    )
-
-    # Argmax as an AGGREGATE, not a window: max over struct(score,
-    # -doc_idx) is lexicographic, so ties go to the LOWEST doc index —
-    # exactly the reference tiebreak (utils.rs:169-191, M6).  Unlike
-    # row_number() over a window this keeps map-side partial aggregation
-    # (the per-title shuffle carries <=1 row per partition, no sort) —
-    # at 100 TB the argmax exchange is O(distinct titles), not
-    # O(candidate pairs).
-    best = (
-        dots.groupBy("__title")
-        .agg(F.max(F.struct(F.col("score"), (-F.col("doc_idx")).alias("neg_idx"))).alias("__m"))
-        .where(F.col("__m.score") > 0.0)
-        .select("__title", (-F.col("__m.neg_idx")).alias("doc_idx"))
-    )
-
-    # Titles sharing no term with the KB never appear in `best` -> coalesce
-    # to corpus[0] ("General Worker"), the reference's zero-score default.
-    corpus = kb.corpus
-    matched = best.withColumn("doc_idx", F.col("doc_idx").cast("int"))
-    corpus_df = F.broadcast(
-        _arrow_df(
-            spark,
-            pd.DataFrame(
-                {
-                    "doc_idx": pd.array(range(len(corpus)), dtype="int32"),
-                    "variant": list(corpus),
-                    "formatted": [f"{v} - {kb.bls_for(v)}" for v in corpus],
-                }
-            ),
-        )
-    )
-    default_out = f"{corpus[0]} - {kb.bls_for(corpus[0])}"
-    title_to_out = (
-        titles.join(matched, "__title", "left")
-        .join(corpus_df, "doc_idx", "left")
-        .select(
-            "__title",
-            F.coalesce(F.col("formatted"), F.lit(default_out)).alias(out_col),
-        )
-    )
-
     return df.join(
         title_to_out, df[title_col] == title_to_out["__title"], "left"
     ).drop("__title")

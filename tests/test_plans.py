@@ -98,9 +98,10 @@ def test_declared_queries_plan_shapes(spark):
 
 def test_round2_scale_claims_hold_in_plans(spark):
     """Plan locks for the SCALING.md claims of the round-2 operators:
-    quantization is map-only, the standardize argmax aggregates with
-    map-side partials (no window sort), the PMI unigram sides broadcast,
-    and the k-means Arrow assignment adds no exchange."""
+    quantization is map-only, the standardize scale form scores the
+    distinct titles in one Python node with no window sort or candidate
+    explode, the PMI unigram sides broadcast, and the k-means Arrow
+    assignment adds no exchange."""
     from duckdb_title_mapper_spark.plans import explain_str, shuffle_count
     from duckdb_title_mapper_spark.workload import core_queries as all_queries
 
@@ -110,11 +111,16 @@ def test_round2_scale_claims_hold_in_plans(spark):
     quant = qs["x_embed_quantize"].spark_fn(spark, SF)
     assert shuffle_count(quant) == 0, explain_str(quant)[:500]
 
-    # standardize scale form: aggregate argmax, not a window sort — the
-    # plan must contain no Window operator at all
+    # standardize scale form: distinct -> one MapInPandas scoring node ->
+    # join.  No window sort, no exploded candidate pairs, and only the
+    # distinct's exchange plus the final group-by's
     scale = qs["std_documents_scale_form"].spark_fn(spark, SF)
     txt = explain_str(scale)
+    simple = explain_str(scale, "simple")
     assert "Window" not in txt, txt[:800]
+    assert simple.count("MapInPandas") == 1, simple
+    assert "Generate" not in simple, simple
+    assert shuffle_count(scale) == 2, simple
 
     # PMI: the two unigram join sides are small aggregates -> broadcast
     pmi = qs["x_collocation_pmi_i"].spark_fn(spark, SF)

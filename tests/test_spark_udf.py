@@ -121,3 +121,60 @@ def test_dataframe_v2_matches_v1(spark):
     v2 = {r.title: r.s for r in v2_df.collect()}
     assert v1 == v2
     assert v1 == CORPUS_104
+
+
+def _assert_v2_matches_v1(spark, df, out_col="s"):
+    """v2 adds to every row of ``df`` exactly the column v1 computes."""
+    from pyspark.sql import functions as F
+
+    import duckdb_title_mapper_spark as engine
+    from duckdb_title_mapper_spark.operators.standardize import standardize_titles_df
+
+    engine.register(spark)
+    v2_df = standardize_titles_df(spark, df, "title", out_col=out_col)
+    assert v2_df.columns == df.columns + [out_col]
+    v1 = df.withColumn(out_col, F.expr("standardize_title(title)")).collect()
+    v2 = v2_df.collect()
+    assert sorted(map(tuple, v1), key=repr) == sorted(map(tuple, v2), key=repr)
+    return v2
+
+
+def test_dataframe_v2_zero_rows(spark):
+    df = spark.createDataFrame([], "title STRING")
+    assert _assert_v2_matches_v1(spark, df) == []
+
+
+def test_dataframe_v2_all_null(spark):
+    df = spark.createDataFrame([(i, None) for i in range(3)], "id INT, title STRING")
+    rows = _assert_v2_matches_v1(spark, df)
+    assert len(rows) == 3 and all(r.s is None for r in rows)
+
+
+def test_dataframe_v2_titles_over_partitions(spark):
+    """The same titles in every partition: the distinct dedups across
+    partitions and the join gives every input row its output once."""
+    titles = (list(CORPUS_104) + [None]) * 3
+    df = spark.createDataFrame(
+        list(enumerate(titles)), "id INT, title STRING").repartition(4)
+    rows = _assert_v2_matches_v1(spark, df)
+    assert len(rows) == len(titles)
+    assert sorted(r.id for r in rows) == list(range(len(titles)))
+
+
+def test_dataframe_v2_out_col_with_space(spark):
+    df = spark.createDataFrame([(t,) for t in AUTHORITATIVE], "title STRING")
+    rows = _assert_v2_matches_v1(spark, df, out_col="std title")
+    assert {r["title"]: r["std title"] for r in rows} == AUTHORITATIVE
+
+
+def test_dataframe_v2_does_not_materialize(spark, monkeypatch):
+    """The title set has one consumer, so nothing is checkpointed."""
+    from duckdb_title_mapper_spark.plans import materialize as mat
+
+    calls = []
+    inner = mat.materialize
+    monkeypatch.setattr(mat, "materialize",
+                        lambda *a, **k: calls.append(a) or inner(*a, **k))
+    df = spark.createDataFrame([(t,) for t in AUTHORITATIVE], "title STRING")
+    _assert_v2_matches_v1(spark, df)
+    assert calls == []

@@ -1,11 +1,15 @@
 """TF-IDF index exactness (SURVEY.md §2.2 M3-M7)."""
 
 import math
+import random
 
 import numpy as np
 
+from goldens import AUTHORITATIVE, CORPUS_104, EDGE_CASES, MESSY_PROBES
+
 from duckdb_title_mapper_spark.functions.tfidf import (
     best_match_index,
+    best_match_indices,
     build_index,
     vectorize_query,
 )
@@ -64,3 +68,65 @@ def test_norms_positive():
     idx = get_index()
     # every KB variant has at least one token => positive norm
     assert float(np.min(idx.doc_norms)) > 0.0
+
+
+def _noisy(rng, variant):
+    """One random edit of a KB variant: case, a dropped, repeated or
+    swapped token, an OOV token, punctuation or a character transposition."""
+    toks = variant.split()
+    i = rng.randrange(len(toks))
+    edit = rng.randrange(7)
+    if edit == 0:
+        toks = [t.upper() if rng.random() < 0.5 else t.lower() for t in toks]
+    elif edit == 1 and len(toks) > 1:
+        del toks[i]
+    elif edit == 2:
+        toks.insert(i, toks[i])
+    elif edit == 3:
+        rng.shuffle(toks)
+    elif edit == 4:
+        toks.insert(i, "qzxv")
+    elif edit == 5:
+        toks[i] = f"({toks[i]}),"
+    elif len(toks[i]) > 1:
+        j = rng.randrange(len(toks[i]) - 1)
+        t = toks[i]
+        toks[i] = t[:j] + t[j + 1] + t[j] + t[j + 2:]
+    return " ".join(toks)
+
+
+def _assert_batch_is_per_title(index, titles):
+    assert best_match_indices(index, titles) == [
+        best_match_index(index, t) for t in titles
+    ]
+
+
+def test_batch_kernel_equals_single_title_spec_on_kb():
+    """``best_match_indices`` is ``best_match_index`` mapped over the batch:
+    goldens, 2,000 seeded noisy KB variants, and OOV, empty and
+    whitespace-only titles, all in one batch so the shared scores buffer
+    is reset between titles of every kind."""
+    index = get_index()
+    rng = random.Random(6)
+    corpus = list(load_kb().corpus)
+    titles = [*AUTHORITATIVE, *CORPUS_104, *EDGE_CASES, *MESSY_PROBES]
+    titles += [_noisy(rng, v) for v in rng.sample(corpus, 2000)]
+    titles += ["qzxv", "qzxv wvkj", "", " ", "\t\n", "!!!", "12345"]
+    rng.shuffle(titles)
+    _assert_batch_is_per_title(index, titles)
+
+
+def test_batch_kernel_equals_single_title_spec_on_ties_and_zero_idf():
+    # duplicate docs: equal scores resolve to the lowest doc index
+    dup = build_index(["alpha beta", "gamma", "alpha beta", "beta alpha",
+                       "gamma", "delta alpha"])
+    queries = ["alpha beta", "gamma", "beta", "alpha", "delta", "zzz", ""]
+    _assert_batch_is_per_title(dup, queries)
+    assert best_match_indices(dup, ["alpha beta", "gamma"]) == [0, 1]
+    # "common" is in every doc: idf 0, so a query of only it scores 0
+    # everywhere and falls back to index 0
+    flat = build_index(["common alpha", "common beta", "common gamma"])
+    assert flat.idf[flat.term_to_idx["common"]] == 0.0
+    queries = ["common", "common common", "common beta", "gamma common"]
+    _assert_batch_is_per_title(flat, queries)
+    assert best_match_indices(flat, queries) == [0, 0, 1, 2]
