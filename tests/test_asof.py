@@ -46,6 +46,25 @@ def test_asof_strict_excludes_exact_tie(spark):
     assert out[200] == 70  # rt=20 excluded under strict <, falls back to 7
 
 
+def test_asof_forward_picks_earliest_at_or_after(spark):
+    def run(inclusive):
+        return {
+            r["lid"]: (r["rid"], r["asof_ts"])
+            for r in asof_join(
+                _left(spark), _right(spark), on="k", left_ts="lt",
+                right_ts="rt", right_payload="rid", inclusive=inclusive,
+                direction="forward",
+            ).collect()
+        }
+
+    out = run(True)
+    assert out[100] == (71, 20)   # lt=10: rt=20 is earliest >= 10
+    assert out[200] == (71, 20)   # lt=20: exact tie matches (inclusive)
+    assert out[300] == (70, 7)    # lt=5: rt=7 is earliest >= 5
+    assert out[400] == (None, None)  # key 2: no right rows at all
+    assert run(False)[200] == (None, None)  # strict >: nothing after 20
+
+
 def test_asof_single_shuffle(spark):
     plan = asof_join(
         _left(spark), _right(spark), on="k", left_ts="lt",

@@ -6,6 +6,9 @@
    query that calls it (Python late binding broke x_k_anonymity in r9);
    the @_q decorator raises on duplicate *query* names but nothing
    guarded duplicate *helper* names — scan the module AST for them.
+
+A third scan keeps every ``@_q`` block that ``_dual``/``_shared`` can
+register folded into that narrower form.
 """
 
 import ast
@@ -44,3 +47,67 @@ def test_no_duplicate_toplevel_defs_in_workload():
             else:
                 seen[node.name] = node.lineno
     assert not dups, f"duplicate top-level defs in workload.py: {dups}"
+
+
+def _is_view_registration(stmt) -> bool:
+    """``register_views(spark, sf_dir, ...)`` or its one-table spelling
+    ``load(spark, sf_dir, "t").createOrReplaceTempView("t")``."""
+    if not (isinstance(stmt, ast.Expr) and isinstance(stmt.value, ast.Call)):
+        return False
+    call = stmt.value
+    if isinstance(call.func, ast.Name):
+        return call.func.id == "register_views"
+    if not (isinstance(call.func, ast.Attribute)
+            and call.func.attr == "createOrReplaceTempView"):
+        return False
+    loader = call.func.value
+    return (isinstance(loader, ast.Call)
+            and isinstance(loader.func, ast.Name) and loader.func.id == "load"
+            and len(loader.args) == 3 and len(call.args) == 1
+            and ast.dump(loader.args[2]) == ast.dump(call.args[0]))
+
+
+def _builder_call(expr):
+    """``(name, [arg dumps])`` for a bare ``name(args)`` call, else None."""
+    if (isinstance(expr, ast.Call) and isinstance(expr.func, ast.Name)
+            and not expr.keywords):
+        return expr.func.id, [ast.dump(a) for a in expr.args]
+    return None
+
+
+def test_no_q_block_has_the_dual_or_shared_shape():
+    """An ``@_q`` block that only registers views and runs ``spark.sql``
+    on one builder — oracle ``h(False)`` against Spark ``h(True)``, or
+    ``h()`` on both sides — is exactly what ``_dual(name, h, tables,
+    doc)`` / ``_shared(name, h(), tables, doc)`` register, so it must use
+    that narrower form."""
+    path = os.path.join(REPO, "duckdb_title_mapper_spark", "workload.py")
+    with open(path) as f:
+        tree = ast.parse(f.read(), filename=path)
+    false, true = ast.dump(ast.Constant(False)), ast.dump(ast.Constant(True))
+    foldable = []
+    for node in tree.body:
+        if not (isinstance(node, ast.FunctionDef)
+                and len(node.decorator_list) == 1 and len(node.body) == 2):
+            continue
+        deco = node.decorator_list[0]
+        if not (isinstance(deco, ast.Call) and isinstance(deco.func, ast.Name)
+                and deco.func.id == "_q" and len(deco.args) >= 2):
+            continue
+        reg, ret = node.body
+        if not (_is_view_registration(reg) and isinstance(ret, ast.Return)
+                and isinstance(ret.value, ast.Call)
+                and isinstance(ret.value.func, ast.Attribute)
+                and ret.value.func.attr == "sql"
+                and len(ret.value.args) == 1):
+            continue
+        spark_side = _builder_call(ret.value.args[0])
+        oracle_side = _builder_call(deco.args[1])
+        if (spark_side and oracle_side and spark_side[0] == oracle_side[0]
+                and (oracle_side[1], spark_side[1])
+                in (([false], [true]), ([], []))):
+            foldable.append(f"{node.name} (line {node.lineno})")
+    assert not foldable, (
+        "@_q blocks with the _dual/_shared shape — register them with "
+        f"_dual/_shared instead: {foldable}"
+    )

@@ -689,6 +689,45 @@ def test_boruvka_msf_matches_python_replay(spark):
     assert got[4][0] == 1 and got[4][1] == len(nodes) - 1
 
 
+def test_boruvka_msf_empty_lineitem_matches_oracle(spark, tmp_path):
+    """Degenerate input: a zero-row lineitem gives an empty co-purchase
+    graph.  Both engines must report every round as (r, 0, 0, 0) — the
+    snapshot's ``coalesce(sum(w), 0)`` is on both sides — and the
+    Spark side's laundered fused-slice unions must run on empty
+    checkpointed relations."""
+    import os
+    import sys
+
+    import duckdb
+    import pyarrow.parquet as pq
+
+    import duckdb_title_mapper_spark.workload as w
+
+    sys.path.insert(0, os.path.join(
+        os.path.dirname(os.path.dirname(__file__)), "scripts"))
+    from check_oracle import canon
+
+    for t in w.TABLES:
+        if t != "lineitem":
+            os.symlink(f"{SF}/{t}.parquet", tmp_path / f"{t}.parquet")
+    lineitem = pq.read_table(f"{SF}/lineitem.parquet")
+    pq.write_table(lineitem.slice(0, 0), tmp_path / "lineitem.parquet")
+
+    q = w.all_queries()["x_boruvka_msf"]
+    sdf = q.spark_fn(spark, str(tmp_path))
+    rows = [tuple(r) for r in sdf.collect()]
+    s_cols, s_rows = canon(rows, sdf.columns)
+    con = duckdb.connect()
+    for t in w.TABLES:
+        con.sql(f"CREATE VIEW {t} AS SELECT * FROM "
+                f"read_parquet('{tmp_path}/{t}.parquet')")
+    rel = con.sql(q.oracle)
+    d_cols, d_rows = canon(rel.fetchall(), list(rel.columns))
+    assert s_cols == d_cols
+    assert s_rows == d_rows
+    assert rows == [(r, 0, 0, 0) for r in range(1, 5)]
+
+
 def test_seq_pattern_support_matches_python_replay(spark):
     """Brute-force subsequence existence per user (actual occurrence
     triples, not the extremes shortcut) — verifying the declared
