@@ -45,6 +45,8 @@ from typing import Iterator
 import numpy as np
 import pandas as pd
 
+from ..sources.tables import load_table
+
 GRID_ROWS = 8
 GRID_COLS = 9
 TILE = 4
@@ -148,6 +150,6 @@ def dhash_bands_table(spark, sf_dir: str):
     doc_id list across the executor threads (at 100 TB the scan's
     natural file splits make this a no-op-sized shuffle of one
     BIGINT column either way)."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
+    docs = load_table(spark, sf_dir, "documents").select(
         "doc_id").repartition(spark.sparkContext.defaultParallelism)
     return dhash_bands_for(docs)

@@ -50,6 +50,8 @@ from typing import Iterator
 
 import pandas as pd
 
+from ..sources.tables import load_table
+
 MEDIA_TYPES = ("image", "audio", "video")
 _FORMATS = {"image": "png", "audio": "wav", "video": "mp4"}
 
@@ -66,7 +68,7 @@ def media_table(spark, sf_dir: str):
     media_type round-robined by doc_id."""
     from pyspark.sql import functions as F
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = load_table(spark, sf_dir, "documents")
     types = F.array(*[F.lit(t) for t in MEDIA_TYPES])
     return docs.select(
         F.col("doc_id").alias("media_id"),
@@ -185,7 +187,7 @@ def real_media_table(spark, sf_dir: str):
     opens.  Built map-side via mapInPandas (Arrow binary batches)."""
     import hashlib
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
+    docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "text"
     )
 
@@ -239,7 +241,7 @@ def codec_media_table(spark, sf_dir: str):
 
     from .jpeg import encode_jpeg_gray, encode_jpeg_gray_progressive
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
+    docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "text"
     )
 
@@ -296,7 +298,7 @@ def png_media_table(spark, sf_dir: str):
 
     from .png import encode_png
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
+    docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "text"
     )
 
@@ -349,7 +351,7 @@ def gif_media_table(spark, sf_dir: str):
 
     from .gif import encode_gif
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
+    docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "text"
     )
 
@@ -408,7 +410,7 @@ def mp4_media_table(spark, sf_dir: str):
 
     from .mp4 import encode_mp4
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
+    docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "text"
     )
 
@@ -453,7 +455,7 @@ def mp3_media_table(spark, sf_dir: str):
 
     from .mp3 import encode_mp3
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
+    docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "text"
     )
 
@@ -580,7 +582,7 @@ def h264_media_table(spark, sf_dir: str):
 
     from .h264 import encode_annexb
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
+    docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "text"
     )
 
@@ -659,7 +661,7 @@ def aac_media_table(spark, sf_dir: str):
 
     from .aac import encode_adts
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
+    docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "text"
     )
 
@@ -1071,7 +1073,7 @@ def wav_am_media_table(spark, sf_dir: str, n_segments: int = 16,
     payload is a real WAV any audio tool opens."""
     import hashlib
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
+    docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "text"
     )
 

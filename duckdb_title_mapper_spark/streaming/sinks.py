@@ -15,6 +15,7 @@ import os
 import shutil
 import tempfile
 
+from ..sources.tables import load_events, load_table, register_views
 from .windows import stream_events
 
 
@@ -154,8 +155,6 @@ def _stage_events_multi(spark, sf_dir: str, parts: int = 4) -> str:
     import hashlib
 
     from pyspark.sql import functions as F
-
-    from ..sources.tables import load_events
 
     src = os.path.realpath(f"{sf_dir}/events.parquet")
     tag = hashlib.md5(src.encode()).hexdigest()[:12]
@@ -539,8 +538,6 @@ def _stage_events_by_time(spark, sf_dir: str, parts: int = 4) -> str:
     if os.path.exists(done):
         return d
 
-    from ..sources.tables import load_events
-
     ev = load_events(spark, sf_dir).select(
         "event_type", "event_id",
         F.unix_micros("ts").alias("us"),
@@ -790,7 +787,7 @@ def _stage_docs_with_text_by_mod(spark, sf_dir: str,
 
     from pyspark.sql import functions as F
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
+    docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "text")
     os.makedirs(d, exist_ok=True)
     staged_rows = 0
@@ -838,7 +835,7 @@ def _stage_docs_by_mod(spark, sf_dir: str, parts: int = 4) -> str:
     if os.path.exists(done):
         return d
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
+    docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "source")
     os.makedirs(d, exist_ok=True)
     staged_rows = 0
@@ -1032,7 +1029,7 @@ def _stage_embeddings_by_mod(spark, sf_dir: str, parts: int = 4) -> str:
     if os.path.exists(done):
         return d
 
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").select(
+    emb = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", "embedding")
     os.makedirs(d, exist_ok=True)
     staged_rows = 0
@@ -1086,8 +1083,6 @@ def ann_assign_stream(spark, sf_dir: str, parts: int = 4):
     cents_dir = os.path.join(out, "cents")
 
     # parquet-backed centroids, built once before the stream starts
-    from ..sources.tables import register_views
-
     register_views(spark, sf_dir, "embeddings")
     (spark.sql(ivf_cents_sql(True, "embeddings"))
      .coalesce(1).write.mode("overwrite").parquet(cents_dir))
@@ -1289,7 +1284,7 @@ def _stage_orders_by_hash(spark, sf_dir: str, parts: int = 4) -> str:
 
     from pyspark.sql import functions as F
 
-    orders = spark.read.parquet(src).selectExpr(
+    orders = load_table(spark, sf_dir, "orders").selectExpr(
         "o_orderkey AS okey",
         "CAST(CAST(CAST(o_totalprice AS STRING) AS DECIMAL(18,2))"
         " * 100 AS BIGINT) AS w_cents")
@@ -1331,7 +1326,7 @@ def _stage_docs_src_by_mod(spark, sf_dir: str, parts: int = 4) -> str:
 
     from pyspark.sql import functions as F
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
+    docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "source", "text")
     os.makedirs(d, exist_ok=True)
     # md5-derived slice (the portable hash idiom): the testdata's
@@ -1481,8 +1476,8 @@ def _stage_baskets_by_mod(spark, sf_dir: str, parts: int = 4) -> str:
     if os.path.exists(done):
         return d
 
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    pt = spark.read.parquet(f"{sf_dir}/part.parquet")
+    li = load_table(spark, sf_dir, "lineitem")
+    pt = load_table(spark, sf_dir, "part")
     li.createOrReplaceTempView("__stage_li")
     pt.createOrReplaceTempView("__stage_pt")
     baskets = spark.sql(
@@ -1606,8 +1601,6 @@ def _stage_events_by_hour(spark, sf_dir: str, parts: int = 4) -> str:
     done = f"{d}/.staged"
     if os.path.exists(done):
         return d
-
-    from ..sources.tables import load_events
 
     ev = load_events(spark, sf_dir).selectExpr(
         "event_type", "unix_micros(ts) div 3600000000 AS h")

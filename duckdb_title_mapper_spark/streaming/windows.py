@@ -17,6 +17,7 @@ from __future__ import annotations
 import itertools
 
 _RUN_IDS = itertools.count()
+STATE_PARTITIONS = 4  # shuffle (= state store) partitions of a run_to_memory run
 
 EVENTS_RAW_SCHEMA = (
     "event_id BIGINT, ts BIGINT, user_id BIGINT, event_type STRING, "
@@ -138,13 +139,15 @@ def stream_static_enrich(spark, sf_dir: str):
     the dimension ships once per executor, the firehose never moves."""
     from pyspark.sql import functions as F
 
+    from ..sources.tables import load_table
+
     purchases = (
         stream_events(spark, sf_dir)
         .where(F.col("event_type") == "purchase")
         .select("user_id", "value")
     )
     customers = (
-        spark.read.parquet(f"{sf_dir}/customer.parquet")
+        load_table(spark, sf_dir, "customer")
         .select("c_custkey", "c_mktsegment")
     )
     return (
@@ -283,27 +286,27 @@ def click_purchase_join(spark, sf_dir: str, horizon_minutes: int = 60,
     )
 
 
-def run_to_memory(streaming_df, mode: str = "complete",
-                  state_partitions: int | None = 4):
+def run_to_memory(streaming_df, mode: str = "complete"):
     """Run a streaming DataFrame to completion (availableNow) into a
     memory sink; return the results as a batch DataFrame.
 
-    ``state_partitions`` temporarily overrides
-    ``spark.sql.shuffle.partitions`` for the run: streaming state
-    partitioning is fixed at FIRST start (it cannot change under an
-    existing checkpoint), and every micro-batch commits one state-store
-    delta file per partition per stateful operator — at local bench
-    scale that per-partition commit I/O dominates (32 → 8 partitions
-    measured 10× faster on the stream-stream join; 8 → 4 another ~30%
-    warm, with 2 only marginally better — 4 keeps some intra-batch
-    parallelism).  A cluster
+    ``spark.sql.shuffle.partitions`` is ``STATE_PARTITIONS`` for the run:
+    streaming state partitioning is fixed at FIRST start (it cannot
+    change under an existing checkpoint), and every micro-batch commits
+    one state-store delta file per partition per stateful operator — at
+    local bench scale that per-partition commit I/O dominates (32 → 8
+    partitions measured 10× faster on the stream-stream join; 8 → 4
+    another ~30% warm, with 2 only marginally better and 1 no better on
+    the catalog mix — 4 keeps some intra-batch parallelism).  A cluster
     deployment sizes this to executors × cores before first start; the
-    result set is partitioning-independent either way.  ``None`` keeps
-    the session setting."""
+    result set is partitioning-independent either way.
+
+    The sink's temp view is dropped once the result DataFrame is built:
+    that DataFrame's plan holds the sink itself, so it still collects
+    every row, while the session no longer keeps each run's rows alive."""
     spark = streaming_df.sparkSession
     prev = spark.conf.get("spark.sql.shuffle.partitions")
-    if state_partitions is not None:
-        spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
+    spark.conf.set("spark.sql.shuffle.partitions", str(STATE_PARTITIONS))
     try:
         name = f"__stream_sink_{next(_RUN_IDS)}"
         q = (
@@ -315,9 +318,10 @@ def run_to_memory(streaming_df, mode: str = "complete",
         )
         q.awaitTermination()
     finally:
-        if state_partitions is not None:
-            spark.conf.set("spark.sql.shuffle.partitions", prev)
-    return streaming_df.sparkSession.table(name)
+        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    out = spark.table(name)
+    spark.catalog.dropTempView(name)
+    return out
 
 
 def ohlc_windows(spark, sf_dir: str, window: str = "1 hour",
@@ -356,8 +360,7 @@ def ohlc_windows(spark, sf_dir: str, window: str = "1 hour",
     )
 
 
-def run_to_memory_rocksdb(streaming_df, mode: str = "append",
-                          state_partitions: int | None = 4):
+def run_to_memory_rocksdb(streaming_df, mode: str = "append"):
     """``run_to_memory`` with the RocksDB state store provider pinned for
     the run — required by ``transformWithStateInPandas`` (the API rejects
     the default HDFS-backed provider).  RocksDB is also the provider a
@@ -372,8 +375,7 @@ def run_to_memory_rocksdb(streaming_df, mode: str = "append",
         "RocksDBStateStoreProvider",
     )
     try:
-        return run_to_memory(streaming_df, mode=mode,
-                             state_partitions=state_partitions)
+        return run_to_memory(streaming_df, mode=mode)
     finally:
         if prev is None:
             spark.conf.unset(key)

@@ -8,7 +8,8 @@
    guarded duplicate *helper* names — scan the module AST for them.
 
 A third scan keeps every ``@_q`` block that ``_dual``/``_shared`` can
-register folded into that narrower form.
+register folded into that narrower form, and a fourth keeps every read
+of a testdata table on ``sources/tables.py``'s loaders.
 """
 
 import ast
@@ -110,4 +111,28 @@ def test_no_q_block_has_the_dual_or_shared_shape():
     assert not foldable, (
         "@_q blocks with the _dual/_shared shape — register them with "
         f"_dual/_shared instead: {foldable}"
+    )
+
+
+def test_testdata_is_read_only_through_the_table_loaders():
+    """``load_table``/``register_views`` serve a testdata table from the
+    footer-schema memo; a direct ``spark.read.parquet(f"{sf_dir}/...")``
+    re-runs Spark's footer-inference job on every call."""
+    pkg = os.path.join(REPO, "duckdb_title_mapper_spark")
+    loader = os.path.join(pkg, "sources", "tables.py")
+    assert os.path.isfile(loader)
+    direct = re.compile(r'read\.parquet\(\s*f"\{sf_dir\}/')
+    hits = []
+    for root, _, files in os.walk(pkg):
+        for name in sorted(files):
+            path = os.path.join(root, name)
+            if not name.endswith(".py") or path == loader:
+                continue
+            with open(path) as f:
+                for i, line in enumerate(f, 1):
+                    if direct.search(line):
+                        hits.append(f"{os.path.relpath(path, REPO)}:{i}")
+    assert not hits, (
+        "read testdata through load_table/register_views, not "
+        f"spark.read.parquet: {hits}"
     )

@@ -21,11 +21,14 @@ SF = "/root/testdata/sf0.001"
 US = 1_000_000
 
 
-def test_tumbling_stream_equals_batch(spark):
-    got = run_to_memory(tumbling_counts(spark, SF))
+def _tumbling_by_key(rows):
+    return {(r["bucket_start"], r["event_type"]): r["n_events"] for r in rows}
+
+
+def _batch_tumbling(spark):
     from duckdb_title_mapper_spark.workload import load_events
 
-    expect = (
+    return (
         load_events(spark, SF)
         .groupBy(F.window("ts", "1 hour"), "event_type")
         .agg(F.count("*").alias("n_events"))
@@ -35,9 +38,26 @@ def test_tumbling_stream_equals_batch(spark):
             "n_events",
         )
     )
-    g = {(r["bucket_start"], r["event_type"]): r["n_events"] for r in got.collect()}
-    e = {(r["bucket_start"], r["event_type"]): r["n_events"] for r in expect.collect()}
-    assert g == e
+
+
+def test_tumbling_stream_equals_batch(spark):
+    got = run_to_memory(tumbling_counts(spark, SF))
+    expect = _batch_tumbling(spark)
+    assert _tumbling_by_key(got.collect()) == _tumbling_by_key(expect.collect())
+
+
+def test_run_to_memory_drops_its_sink_view(spark):
+    """The memory sink's temp view is gone once ``run_to_memory``
+    returns (the session no longer pins the run's rows), and the
+    returned DataFrame still delivers every row."""
+    got = run_to_memory(tumbling_counts(spark, SF))
+    sinks = [t.name for t in spark.catalog.listTables()
+             if t.name.startswith("__stream_sink_")]
+    assert sinks == []
+    rows = got.collect()
+    assert rows
+    assert _tumbling_by_key(rows) == _tumbling_by_key(
+        _batch_tumbling(spark).collect())
 
 
 def _write_events(path: str, rows, mtime: float):
