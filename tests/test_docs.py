@@ -136,3 +136,22 @@ def test_testdata_is_read_only_through_the_table_loaders():
         "read testdata through load_table/register_views, not "
         f"spark.read.parquet: {hits}"
     )
+
+
+def test_copurchase_pairs_are_spelled_once():
+    """The DISTINCT co-purchase pair join is defined once, as
+    ``operators/graph.COPURCHASE_PAIRS_SQL`` (the Spark-side store
+    writes it); an oracle that spells it again can drift from the
+    relation the Spark side reads."""
+    spelled = re.compile(
+        r"DISTINCT\s+a\.l_partkey\s+AS\s+s,\s*b\.l_partkey\s+AS\s+d\s+"
+        r"FROM\s+lineitem\s+a\s+JOIN\s+lineitem\s+b\b")
+    path = os.path.join(REPO, "duckdb_title_mapper_spark", "workload.py")
+    with open(path) as f:
+        src = f.read()
+    hits = [src.count("\n", 0, m.start()) + 1
+            for m in spelled.finditer(src)]
+    assert not hits, (
+        "read COPURCHASE_PAIRS_SQL instead of spelling the pair join: "
+        f"workload.py lines {hits}"
+    )

@@ -1,5 +1,10 @@
 """Connected components: known component structure, determinism, and
-convergence on chains longer than one propagation round."""
+convergence on chains longer than one propagation round.  The
+single-source min-plus loops: materialization cadence per query."""
+
+import importlib
+
+import pytest
 
 from duckdb_title_mapper_spark.operators.graph import connected_components
 
@@ -40,3 +45,39 @@ def test_components_empty_edge_relation(spark):
     out = connected_components(empty)
     assert out.columns == ["vertex", "component"]
     assert out.collect() == []
+
+
+@pytest.mark.parametrize("name, calls", [
+    ("x_bfs_levels", {"materialize": 2}),
+    ("x_sssp_bellman", {"materialize_adaptive": 4}),
+    ("x_graph_diameter_sweep", {"materialize": 5}),
+    ("x_temporal_reachability", {"materialize": 6}),
+])
+def test_min_plus_loops_keep_their_materialize_cadence(
+        spark, sf_dir, monkeypatch, name, calls):
+    """BFS, SSSP and the diameter sweep materialize every other
+    relaxation (two per call); temporal reachability materializes every
+    round because each round is also a trajectory snapshot.  Counts the
+    top-level calls made while the query's DataFrame is built
+    (``materialize_adaptive`` calls ``materialize`` itself)."""
+    from duckdb_title_mapper_spark.workload import core_queries
+
+    mod = importlib.import_module(
+        "duckdb_title_mapper_spark.plans.materialize")
+    counts, depth = {}, [0]
+
+    def spy(fname, real):
+        def wrapped(*args, **kwargs):
+            if not depth[0]:
+                counts[fname] = counts.get(fname, 0) + 1
+            depth[0] += 1
+            try:
+                return real(*args, **kwargs)
+            finally:
+                depth[0] -= 1
+        return wrapped
+
+    for fname in ("materialize", "materialize_adaptive"):
+        monkeypatch.setattr(mod, fname, spy(fname, getattr(mod, fname)))
+    core_queries()[name].spark_fn(spark, sf_dir)
+    assert counts == calls

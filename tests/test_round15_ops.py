@@ -7,6 +7,7 @@ r14 #5's done-condition).
 
 import numpy as np
 import pandas as pd
+import pytest
 
 from duckdb_title_mapper_spark.plans.materialize import materialize as _mat
 from duckdb_title_mapper_spark.workload import (
@@ -689,12 +690,18 @@ def test_boruvka_msf_matches_python_replay(spark):
     assert got[4][0] == 1 and got[4][1] == len(nodes) - 1
 
 
-def test_boruvka_msf_empty_lineitem_matches_oracle(spark, tmp_path):
+@pytest.mark.parametrize("name", [
+    "x_boruvka_msf", "x_bfs_levels", "x_sssp_bellman",
+    "x_graph_diameter_sweep", "x_temporal_reachability"])
+def test_graph_loop_empty_lineitem_matches_oracle(spark, tmp_path, name):
     """Degenerate input: a zero-row lineitem gives an empty co-purchase
-    graph.  Both engines must report every round as (r, 0, 0, 0) — the
-    snapshot's ``coalesce(sum(w), 0)`` is on both sides — and the
-    Spark side's laundered fused-slice unions must run on empty
-    checkpointed relations."""
+    graph, and each graph loop must still return what its oracle
+    returns.  Boruvka reports every round as (r, 0, 0, 0) — the
+    snapshot's ``coalesce(sum(w), 0)`` is on both sides — and its
+    laundered fused-slice unions must run on empty checkpointed
+    relations.  The min-plus loops start from an empty seeded state;
+    the diameter sweep's single row must survive an empty phase-2
+    seed."""
     import os
     import sys
 
@@ -713,7 +720,7 @@ def test_boruvka_msf_empty_lineitem_matches_oracle(spark, tmp_path):
     lineitem = pq.read_table(f"{SF}/lineitem.parquet")
     pq.write_table(lineitem.slice(0, 0), tmp_path / "lineitem.parquet")
 
-    q = w.all_queries()["x_boruvka_msf"]
+    q = w.all_queries()[name]
     sdf = q.spark_fn(spark, str(tmp_path))
     rows = [tuple(r) for r in sdf.collect()]
     s_cols, s_rows = canon(rows, sdf.columns)
@@ -725,7 +732,8 @@ def test_boruvka_msf_empty_lineitem_matches_oracle(spark, tmp_path):
     d_cols, d_rows = canon(rel.fetchall(), list(rel.columns))
     assert s_cols == d_cols
     assert s_rows == d_rows
-    assert rows == [(r, 0, 0, 0) for r in range(1, 5)]
+    if name == "x_boruvka_msf":
+        assert rows == [(r, 0, 0, 0) for r in range(1, 5)]
 
 
 def test_seq_pattern_support_matches_python_replay(spark):
