@@ -7,6 +7,12 @@ the log — any Spark batch read of the directory — see only committed
 files).  The reference has no streaming surface at all (its whole API is
 one scalar function, src/lib.rs:72-86); this supplies the sink half of
 the mandated streaming capabilities.
+
+Every foreachBatch stream here runs through ``run_foreach_batch``; the
+fixed-size keyed stores publish through ``publish_version`` (the
+``CURRENT`` version pointer) and the append-only stores read their
+``X.b{id}`` per-batch dirs through ``read_batch_dirs``.  Multi-batch
+sources are staged by ``staging.stage_slices``.
 """
 
 from __future__ import annotations
@@ -16,7 +22,112 @@ import shutil
 import tempfile
 
 from ..sources.tables import load_events, load_table, register_views
+from .staging import read_slices, stage_path, stage_slices
 from .windows import stream_events
+
+
+def run_foreach_batch(stream, per_batch, prefix: str) -> str:
+    """Run ``stream`` to completion through a foreachBatch sink in a fresh
+    ``mkdtemp`` directory and return that directory.
+
+    ``per_batch(out, batch_df, batch_id)`` is called once per micro-batch
+    (again for a redelivered one) with ``out`` the run's directory; the
+    checkpoint lives in ``out/chk`` and the trigger is ``availableNow``,
+    so the call returns once every staged file has been consumed.  The
+    output mode is ``update``: a streaming aggregation (the upsert) emits
+    only the keys each batch changed, and a stream without aggregation
+    treats update exactly as append."""
+    out = tempfile.mkdtemp(prefix=prefix)
+    (stream.writeStream
+     .foreachBatch(lambda batch_df, batch_id:
+                   per_batch(out, batch_df, batch_id))
+     .outputMode("update")
+     .option("checkpointLocation", os.path.join(out, "chk"))
+     .trigger(availableNow=True)
+     .start()
+     .awaitTermination())
+    return out
+
+
+def current_store(out: str):
+    """The store version the ``CURRENT`` pointer under ``out`` names, or
+    None before the first publication."""
+    ptr = os.path.join(out, "CURRENT")
+    if not os.path.exists(ptr):
+        return None
+    with open(ptr) as f:
+        name = f.read().strip()
+    path = os.path.join(out, name)
+    return path if name and os.path.exists(path) else None
+
+
+def publish_version(out: str, batch_id: int, partial, fold) -> None:
+    """Publish store version ``batch_id`` = ``fold(base, partial)`` (or
+    ``partial`` alone for the first version) behind the ``CURRENT``
+    pointer under ``out``.
+
+    - The base is the newest PUBLISHED version older than ``batch_id``
+      (versions up to the one ``CURRENT`` names were all published), not
+      whatever ``CURRENT`` names.  A batch redelivered after its flip (a
+      crash before Spark's commit-log write) then rebuilds the identical
+      version from the same base, so a fold that is not idempotent
+      (count-min's ADD) cannot count the batch twice, and the directory
+      read is never the one being written.
+    - The full folded store goes to a fresh ``store.v{batch_id}`` dir and
+      is published with one ``os.replace`` of the pointer file (atomic on
+      POSIX).  A crash before the flip leaves ``CURRENT`` on the previous
+      full version.
+    - After the flip only versions older than the base are deleted, so
+      the base a redelivery needs survives: at most the base, the newest
+      version and one in-flight version exist at any time."""
+    cur = current_store(out)
+    newest = (-1 if cur is None
+              else int(os.path.basename(cur).removeprefix("store.v")))
+    versions = (int(n.removeprefix("store.v")) for n in os.listdir(out)
+                if n.startswith("store.v"))
+    older = sorted(v for v in versions if v <= newest and v < batch_id)
+    new = partial
+    if older:
+        old = partial.sparkSession.read.parquet(
+            os.path.join(out, f"store.v{older[-1]}"))
+        new = fold(old, partial)
+    vname = f"store.v{batch_id}"
+    # the lazy read of the base executes here, before publication
+    new.coalesce(1).write.mode("overwrite").parquet(os.path.join(out, vname))
+    tmp_ptr = os.path.join(out, f"CURRENT.tmp{batch_id}")
+    with open(tmp_ptr, "w") as f:
+        f.write(vname)
+    os.replace(tmp_ptr, os.path.join(out, "CURRENT"))
+    for v in older[:-1]:
+        shutil.rmtree(os.path.join(out, f"store.v{v}"), ignore_errors=True)
+
+
+def run_store_stream(stream, prefix: str, partial, fold):
+    """Run ``stream`` through foreachBatch into a version-pointer store
+    and return the final published store as a batch DataFrame.
+    ``partial(batch_df)`` is the batch's contribution and
+    ``fold(old, part)`` merges it into the store (see
+    ``publish_version``)."""
+    out = run_foreach_batch(
+        stream,
+        lambda out, batch_df, batch_id: publish_version(
+            out, batch_id, partial(batch_df), fold),
+        prefix)
+    final = current_store(out)
+    if final is None:
+        raise RuntimeError(f"foreachBatch store {out} has no version")
+    return stream.sparkSession.read.parquet(final)
+
+
+def read_batch_dirs(spark, out: str, name: str, below: int | None = None):
+    """The union of the per-batch ``{name}.b{id}`` dirs under ``out`` —
+    only ids below ``below`` when given — or None when there are none."""
+    ids = sorted(
+        int(n[len(name) + 2:]) for n in os.listdir(out)
+        if n.startswith(f"{name}.b"))
+    dirs = [os.path.join(out, f"{name}.b{i}") for i in ids
+            if below is None or i < below]
+    return spark.read.parquet(*dirs) if dirs else None
 
 
 def file_sink_roundtrip(spark, sf_dir: str):
@@ -63,56 +174,23 @@ def foreach_batch_upsert(spark, sf_dir: str):
     batch rebuilds the identical store version and re-flips the pointer,
     so retries cannot double-count or lose untouched keys.
 
-    Crash-safety: each batch writes a COMPLETE merged store to a fresh
-    `store.v{batch_id}` directory, then publishes it with a single
-    `os.replace` of the CURRENT pointer file (atomic on POSIX).  A crash
-    before the flip leaves CURRENT on the previous full version; a crash
-    after the flip is absorbed because checkpoint replay of the same
-    batch_id rewrites the same version with the same rows.  Superseded
-    versions are deleted after the flip, so exactly one full store plus
-    at most one in-flight version exist at any time.  At 100 TB the
-    store is key-cardinality-sized (here |event_type|), never
-    stream-sized, and a real deployment swaps the pointer dance for
-    MERGE INTO on a transactional table — same foreachBatch shape.
+    Crash-safety (``publish_version``): each batch writes a COMPLETE
+    merged store to a fresh `store.v{batch_id}` directory, built from
+    the newest published version OLDER than the batch, then publishes
+    it with a single `os.replace` of the CURRENT pointer file (atomic on
+    POSIX).  A crash before the flip leaves CURRENT on the previous full
+    version; a crash after the flip is absorbed because checkpoint
+    replay of the same batch_id rebuilds the same version from the same
+    base.  After the flip only versions older than that base are
+    deleted, so at most two full stores (the base and the newest) plus
+    one in-flight version exist at any time.  At 100 TB the store is
+    key-cardinality-sized (here |event_type|), never stream-sized, and a
+    real deployment swaps the pointer dance for MERGE INTO on a
+    transactional table — same foreachBatch shape.
 
     Aggregates are integer-exact s6 BIGINTs (the graded idiom), so the
     store equals the batch GROUP BY oracle exactly."""
     from pyspark.sql import functions as F
-
-    out = tempfile.mkdtemp(prefix="dtm_stream_upsert_")
-    chk = os.path.join(out, "chk")
-    ptr = os.path.join(out, "CURRENT")
-
-    def current_store():
-        if not os.path.exists(ptr):
-            return None
-        with open(ptr) as f:
-            name = f.read().strip()
-        path = os.path.join(out, name)
-        return path if name and os.path.exists(path) else None
-
-    def merge(batch_df, batch_id):
-        sess = batch_df.sparkSession
-        new = batch_df
-        cur = current_store()
-        if cur is not None:
-            old = sess.read.parquet(cur)
-            new = old.join(new, "event_type", "left_anti").unionByName(new)
-        vname = f"store.v{batch_id}"
-        vdir = os.path.join(out, vname)
-        # write the FULL merged store to a fresh versioned dir (the lazy
-        # read of the old store executes here, before publication), then
-        # publish with one atomic pointer replace
-        new.coalesce(1).write.mode("overwrite").parquet(vdir)
-        tmp_ptr = os.path.join(out, f"CURRENT.tmp{batch_id}")
-        with open(tmp_ptr, "w") as f:
-            f.write(vname)
-        os.replace(tmp_ptr, ptr)
-        # GC superseded versions only AFTER the flip (crash here is
-        # harmless: CURRENT already points at the new full store)
-        for d in os.listdir(out):
-            if d.startswith("store.v") and d != vname:
-                shutil.rmtree(os.path.join(out, d), ignore_errors=True)
 
     agg = (
         stream_events(spark, sf_dir)
@@ -126,18 +204,10 @@ def foreach_batch_upsert(spark, sf_dir: str):
             ).cast("bigint").alias("total_value_s6"),
         )
     )
-    q = (
-        agg.writeStream.foreachBatch(merge)
-        .outputMode("update")
-        .option("checkpointLocation", chk)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    final = current_store()
-    if final is None:
-        raise RuntimeError("foreachBatch upsert produced no store version")
-    return spark.read.parquet(final)
+    return run_store_stream(
+        agg, "dtm_stream_upsert_", lambda batch_df: batch_df,
+        lambda old, new: (old.join(new, "event_type", "left_anti")
+                          .unionByName(new)))
 
 
 def _stage_events_multi(spark, sf_dir: str, parts: int = 4) -> str:
@@ -152,43 +222,21 @@ def _stage_events_multi(spark, sf_dir: str, parts: int = 4) -> str:
     lost both classes while the batch oracles aggregate ALL rows — an
     unasserted data assumption, r6 ADVICE).  A staged-row-count
     assertion makes the row-preservation contract loud either way."""
-    import hashlib
-
     from pyspark.sql import functions as F
-
-    src = os.path.realpath(f"{sf_dir}/events.parquet")
-    tag = hashlib.md5(src.encode()).hexdigest()[:12]
-    # v2: hash-pmod split (bump invalidates dirs staged under the old
-    # modulo split, which dropped NULL/negative user_ids)
-    d = f"/tmp/duckdb_title_mapper_spark_stream/{tag}_multi{parts}v2"
-    done = f"{d}/.staged"
-    if os.path.exists(done):
-        return d
 
     ev = load_events(spark, sf_dir).select("event_id", "user_id",
                                            "event_type")
-    os.makedirs(d, exist_ok=True)
-    bucket = F.pmod(F.hash(F.col("user_id")), F.lit(parts))
-    staged_rows = 0
-    for p in range(parts):
-        sliced = ev.where(bucket == p)
-        staged_rows += sliced.count()
-        (sliced.coalesce(1)
-         .write.mode("overwrite")
-         .parquet(f"{d}/_build_{p}"))
-        part_file = next(
-            f for f in os.listdir(f"{d}/_build_{p}") if f.endswith(".parquet")
-        )
-        os.replace(f"{d}/_build_{p}/{part_file}", f"{d}/slice_{p}.parquet")
-    total = ev.count()
-    if staged_rows != total:
-        raise AssertionError(
-            f"multi-file staging lost rows: staged {staged_rows} of "
-            f"{total} — the split predicate is not total over user_id"
-        )
-    with open(done, "w") as f:
-        f.write("ok")
-    return d
+    return stage_slices(
+        stage_path(sf_dir, "events", f"multi{parts}"),
+        ev.withColumn("slice", F.pmod(F.hash("user_id"), F.lit(parts))),
+        parts)
+
+
+def _events_multi_stream(spark, sf_dir: str):
+    """The ``_stage_events_multi`` slices as a one-slice-per-batch
+    stream (the sketch-monoid family's shared source)."""
+    return read_slices(spark, _stage_events_multi(spark, sf_dir),
+                       "event_id BIGINT, user_id BIGINT, event_type STRING")
 
 
 def countmin_stream_sketch(spark, sf_dir: str, d: int = 4, w: int = 64):
@@ -201,29 +249,21 @@ def countmin_stream_sketch(spark, sf_dir: str, d: int = 4, w: int = 64):
     availableNow replay over a 4-slice staging of events, the store
     equals the batch sketch exactly (the oracle).
 
+    ADD is not idempotent, so a batch redelivered after its pointer
+    flip must not be added to a store that already holds it: the
+    version-pointer store builds version N from the newest published
+    version OLDER than N (``publish_version``), so the redelivery
+    rewrites version N identically instead of counting the batch twice.
+
     This is the streaming half of the sketch family: a 100 TB firehose
     maintains heavy-hitter state in d*w integers per shard, shards add,
     and no raw-key state store exists at all (contrast
     stream_content_dedup's unbounded signature store)."""
     from pyspark.sql import functions as F
 
-    src_dir = _stage_events_multi(spark, sf_dir)
-    out = tempfile.mkdtemp(prefix="dtm_stream_cm_")
-    chk = os.path.join(out, "chk")
-    ptr = os.path.join(out, "CURRENT")
-
-    def current_store():
-        if not os.path.exists(ptr):
-            return None
-        with open(ptr) as f:
-            name = f.read().strip()
-        path = os.path.join(out, name)
-        return path if name and os.path.exists(path) else None
-
-    def merge(batch_df, batch_id):
-        sess = batch_df.sparkSession
+    def partial(batch_df):
         batch_df.createOrReplaceTempView("__cm_batch")
-        part = sess.sql(f"""
+        return batch_df.sparkSession.sql(f"""
             SELECT r,
                    CAST(conv(substr(md5(concat(CAST(r AS STRING), ':',
                         CAST(user_id AS STRING))), 1, 8), 16, 10)
@@ -233,45 +273,12 @@ def countmin_stream_sketch(spark, sf_dir: str, d: int = 4, w: int = 64):
                          explode(sequence(0, {d - 1})) AS r
                   FROM __cm_batch) e
             GROUP BY 1, 2""")
-        cur = current_store()
-        if cur is not None:
-            old = sess.read.parquet(cur)
-            part = (
-                old.unionByName(part)
-                .groupBy("r", "col")
-                .agg(F.sum("cell").cast("bigint").alias("cell"))
-            )
-        vname = f"store.v{batch_id}"
-        vdir = os.path.join(out, vname)
-        part.coalesce(1).write.mode("overwrite").parquet(vdir)
-        tmp_ptr = os.path.join(out, f"CURRENT.tmp{batch_id}")
-        with open(tmp_ptr, "w") as f:
-            f.write(vname)
-        os.replace(tmp_ptr, ptr)
-        for dd in os.listdir(out):
-            if dd.startswith("store.v") and dd != vname:
-                shutil.rmtree(os.path.join(out, dd), ignore_errors=True)
 
-    raw = (
-        spark.readStream.schema(
-            "event_id BIGINT, user_id BIGINT, event_type STRING"
-        )
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src_dir)
-    )
-    q = (
-        raw.writeStream.foreachBatch(merge)
-        .option("checkpointLocation", chk)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    final = current_store()
-    if final is None:
-        raise RuntimeError("streaming count-min produced no store version")
-    return spark.read.parquet(final).select(
-        F.col("r").cast("bigint").alias("r"), "col", "cell"
-    )
+    store = run_store_stream(
+        _events_multi_stream(spark, sf_dir), "dtm_stream_cm_", partial,
+        lambda old, part: (old.unionByName(part).groupBy("r", "col")
+                           .agg(F.sum("cell").cast("bigint").alias("cell"))))
+    return store.select(F.col("r").cast("bigint").alias("r"), "col", "cell")
 
 
 def bloom_stream_words(spark, sf_dir: str, m_words: int = 512, k: int = 3):
@@ -289,21 +296,8 @@ def bloom_stream_words(spark, sf_dir: str, m_words: int = 512, k: int = 3):
     from pyspark.sql import functions as F
 
     m = m_words * 63  # 63 usable bits per BIGINT word (bit 63 = sign)
-    src_dir = _stage_events_multi(spark, sf_dir)
-    out = tempfile.mkdtemp(prefix="dtm_stream_bloom_")
-    chk = os.path.join(out, "chk")
-    ptr = os.path.join(out, "CURRENT")
 
-    def current_store():
-        if not os.path.exists(ptr):
-            return None
-        with open(ptr) as f:
-            name = f.read().strip()
-        path = os.path.join(out, name)
-        return path if name and os.path.exists(path) else None
-
-    def merge(batch_df, batch_id):
-        sess = batch_df.sparkSession
+    def partial(batch_df):
         batch_df.createOrReplaceTempView("__bloom_batch")
         slices = "\n      UNION ALL ".join(
             "SELECT CAST(conv(substr(md5(CAST(user_id AS STRING)), "
@@ -311,51 +305,19 @@ def bloom_stream_words(spark, sf_dir: str, m_words: int = 512, k: int = 3):
             "FROM __bloom_batch"
             for i in range(k)
         )
-        part = sess.sql(f"""
+        return batch_df.sparkSession.sql(f"""
             SELECT pos div 63 AS w,
                    CAST(bit_or(shiftleft(CAST(1 AS BIGINT),
                         CAST(pos % 63 AS INT))) AS BIGINT) AS mask
             FROM ({slices}) p
             GROUP BY pos div 63""")
-        cur = current_store()
-        if cur is not None:
-            old = sess.read.parquet(cur)
-            part = (
-                old.unionByName(part)
-                .groupBy("w")
-                .agg(F.bit_or("mask").cast("bigint").alias("mask"))
-            )
-        vname = f"store.v{batch_id}"
-        vdir = os.path.join(out, vname)
-        part.coalesce(1).write.mode("overwrite").parquet(vdir)
-        tmp_ptr = os.path.join(out, f"CURRENT.tmp{batch_id}")
-        with open(tmp_ptr, "w") as f:
-            f.write(vname)
-        os.replace(tmp_ptr, ptr)
-        for dd in os.listdir(out):
-            if dd.startswith("store.v") and dd != vname:
-                shutil.rmtree(os.path.join(out, dd), ignore_errors=True)
 
-    raw = (
-        spark.readStream.schema(
-            "event_id BIGINT, user_id BIGINT, event_type STRING"
-        )
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src_dir)
-    )
-    q = (
-        raw.writeStream.foreachBatch(merge)
-        .option("checkpointLocation", chk)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    final = current_store()
-    if final is None:
-        raise RuntimeError("streaming Bloom produced no store version")
-    return spark.read.parquet(final).select(
-        F.col("w").cast("bigint").alias("w"), "mask"
-    )
+    store = run_store_stream(
+        _events_multi_stream(spark, sf_dir), "dtm_stream_bloom_", partial,
+        lambda old, part: (old.unionByName(part).groupBy("w")
+                           .agg(F.bit_or("mask").cast("bigint")
+                                .alias("mask"))))
+    return store.select(F.col("w").cast("bigint").alias("w"), "mask")
 
 
 def kmv_stream_minset(spark, sf_dir: str, k: int = 64):
@@ -369,73 +331,24 @@ def kmv_stream_minset(spark, sf_dir: str, k: int = 64):
     store equals the batch bottom-k (the oracle), which carries the
     (k-1)*2^32/h_k cardinality estimate of x_kmv_sketch."""
     from pyspark.sql import functions as F
+    from pyspark.sql.window import Window
 
-    src_dir = _stage_events_multi(spark, sf_dir)
-    out = tempfile.mkdtemp(prefix="dtm_stream_kmv_")
-    chk = os.path.join(out, "chk")
-    ptr = os.path.join(out, "CURRENT")
-
-    def current_store():
-        if not os.path.exists(ptr):
-            return None
-        with open(ptr) as f:
-            name = f.read().strip()
-        path = os.path.join(out, name)
-        return path if name and os.path.exists(path) else None
-
-    def merge(batch_df, batch_id):
-        sess = batch_df.sparkSession
+    def partial(batch_df):
         batch_df.createOrReplaceTempView("__kmv_batch")
-        part = sess.sql(f"""
+        return batch_df.sparkSession.sql(f"""
             SELECT hv FROM (
               SELECT DISTINCT CAST(conv(substr(md5(CAST(user_id
                      AS STRING)), 1, 8), 16, 10) AS BIGINT) AS hv
               FROM __kmv_batch) h
             ORDER BY hv LIMIT {k}""")
-        cur = current_store()
-        if cur is not None:
-            old = sess.read.parquet(cur)
-            part = (
-                old.unionByName(part).distinct()
-                .orderBy("hv").limit(k)
-            )
-        vname = f"store.v{batch_id}"
-        vdir = os.path.join(out, vname)
-        part.coalesce(1).write.mode("overwrite").parquet(vdir)
-        tmp_ptr = os.path.join(out, f"CURRENT.tmp{batch_id}")
-        with open(tmp_ptr, "w") as f:
-            f.write(vname)
-        os.replace(tmp_ptr, ptr)
-        for dd in os.listdir(out):
-            if dd.startswith("store.v") and dd != vname:
-                shutil.rmtree(os.path.join(out, dd), ignore_errors=True)
 
-    raw = (
-        spark.readStream.schema(
-            "event_id BIGINT, user_id BIGINT, event_type STRING"
-        )
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src_dir)
-    )
-    q = (
-        raw.writeStream.foreachBatch(merge)
-        .option("checkpointLocation", chk)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    final = current_store()
-    if final is None:
-        raise RuntimeError("streaming KMV produced no store version")
-    from pyspark.sql.window import Window
-
-    return (
-        spark.read.parquet(final)
-        .select(
-            F.row_number().over(Window.orderBy("hv"))
-            .cast("bigint").alias("rank"),
-            F.col("hv").cast("bigint").alias("hv"),
-        )
+    store = run_store_stream(
+        _events_multi_stream(spark, sf_dir), "dtm_stream_kmv_", partial,
+        lambda old, part: (old.unionByName(part).distinct()
+                           .orderBy("hv").limit(k)))
+    return store.select(
+        F.row_number().over(Window.orderBy("hv")).cast("bigint").alias("rank"),
+        F.col("hv").cast("bigint").alias("hv"),
     )
 
 
@@ -452,23 +365,9 @@ def hll_stream_registers(spark, sf_dir: str):
     exactly (the oracle)."""
     from pyspark.sql import functions as F
 
-    src_dir = _stage_events_multi(spark, sf_dir)
-    out = tempfile.mkdtemp(prefix="dtm_stream_hll_")
-    chk = os.path.join(out, "chk")
-    ptr = os.path.join(out, "CURRENT")
-
-    def current_store():
-        if not os.path.exists(ptr):
-            return None
-        with open(ptr) as f:
-            name = f.read().strip()
-        path = os.path.join(out, name)
-        return path if name and os.path.exists(path) else None
-
-    def merge(batch_df, batch_id):
-        sess = batch_df.sparkSession
+    def partial(batch_df):
         batch_df.createOrReplaceTempView("__hll_batch")
-        part = sess.sql("""
+        return batch_df.sparkSession.sql("""
             SELECT hv div 67108864 AS j,
                    CAST(max(CASE WHEN hv % 67108864 = 0 THEN 27
                             ELSE 27 - length(bin(hv % 67108864)) END)
@@ -477,45 +376,12 @@ def hll_stream_registers(spark, sf_dir: str):
                                1, 8), 16, 10) AS BIGINT) AS hv
                   FROM __hll_batch) h
             GROUP BY hv div 67108864""")
-        cur = current_store()
-        if cur is not None:
-            old = sess.read.parquet(cur)
-            part = (
-                old.unionByName(part)
-                .groupBy("j")
-                .agg(F.max("r").cast("bigint").alias("r"))
-            )
-        vname = f"store.v{batch_id}"
-        vdir = os.path.join(out, vname)
-        part.coalesce(1).write.mode("overwrite").parquet(vdir)
-        tmp_ptr = os.path.join(out, f"CURRENT.tmp{batch_id}")
-        with open(tmp_ptr, "w") as f:
-            f.write(vname)
-        os.replace(tmp_ptr, ptr)
-        for dd in os.listdir(out):
-            if dd.startswith("store.v") and dd != vname:
-                shutil.rmtree(os.path.join(out, dd), ignore_errors=True)
 
-    raw = (
-        spark.readStream.schema(
-            "event_id BIGINT, user_id BIGINT, event_type STRING"
-        )
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src_dir)
-    )
-    q = (
-        raw.writeStream.foreachBatch(merge)
-        .option("checkpointLocation", chk)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    final = current_store()
-    if final is None:
-        raise RuntimeError("streaming HLL produced no store version")
-    return spark.read.parquet(final).select(
-        F.col("j").cast("bigint").alias("j"), "r"
-    )
+    store = run_store_stream(
+        _events_multi_stream(spark, sf_dir), "dtm_stream_hll_", partial,
+        lambda old, part: (old.unionByName(part).groupBy("j")
+                           .agg(F.max("r").cast("bigint").alias("r"))))
+    return store.select(F.col("j").cast("bigint").alias("j"), "r")
 
 
 def _stage_events_by_time(spark, sf_dir: str, parts: int = 4) -> str:
@@ -526,17 +392,8 @@ def _stage_events_by_time(spark, sf_dir: str, parts: int = 4) -> str:
     recursion requires (unlike the modulo splits, whose arrival order
     is id-striped).  Carries precomputed md5 service times so the
     stateful operator only folds."""
-    import hashlib
-
     from pyspark.sql import functions as F
     from pyspark.sql.window import Window
-
-    src = os.path.realpath(f"{sf_dir}/events.parquet")
-    tag = hashlib.md5(src.encode()).hexdigest()[:12]
-    d = f"/tmp/duckdb_title_mapper_spark_stream/{tag}_evtime{parts}"
-    done = f"{d}/.staged"
-    if os.path.exists(done):
-        return d
 
     ev = load_events(spark, sf_dir).select(
         "event_type", "event_id",
@@ -545,40 +402,19 @@ def _stage_events_by_time(spark, sf_dir: str, parts: int = 4) -> str:
             F.substring(F.md5(F.col("event_id").cast("string")), 1, 8),
             16, 10).cast("bigint") % 9000).alias("svc_us"),
     )
-    total = ev.count()
     rn = F.row_number().over(Window.orderBy("us", "event_id"))
     # (rn-1)*parts must be 64-bit (row_number is IntegerType — 32-bit
     # multiply overflows past ~536M events) and the bucketizer must be
-    # exact integer division, not a float round-trip (ADVICE r11).
-    sliced_all = ev.withColumn(
+    # exact integer division, not a float round-trip (ADVICE r11).  The
+    # row total is a window count, so a staged dir is reused without a
+    # Spark job.
+    sliced = ev.withColumn(
         "rn0", rn.cast("bigint") - F.lit(1)
     ).withColumn(
-        "slice", F.expr(f"rn0 * {int(parts)} div {int(total)}")
+        "slice", F.expr(f"rn0 * {int(parts)} div count(1) OVER ()")
     ).drop("rn0")
-    os.makedirs(d, exist_ok=True)
-    staged_rows = 0
-    for p in range(parts):
-        sl = (sliced_all.where(F.col("slice") == p)
-              .drop("slice"))
-        staged_rows += sl.count()
-        (sl.coalesce(1).write.mode("overwrite")
-         .parquet(f"{d}/_build_{p}"))
-        part_file = next(
-            f for f in os.listdir(f"{d}/_build_{p}")
-            if f.endswith(".parquet"))
-        os.replace(f"{d}/_build_{p}/{part_file}", f"{d}/slice_{p}.parquet")
-        shutil.rmtree(f"{d}/_build_{p}", ignore_errors=True)
-    import time as _time
-
-    base = _time.time()
-    for p in range(parts):
-        os.utime(f"{d}/slice_{p}.parquet", (base + p, base + p))
-    if staged_rows != total:
-        raise AssertionError(
-            f"event staging lost rows: staged {staged_rows} of {total}")
-    with open(done, "w") as f:
-        f.write("ok")
-    return d
+    return stage_slices(stage_path(sf_dir, "events", f"evtime{parts}"),
+                        sliced, parts)
 
 
 def queue_wait_stream(spark, sf_dir: str, parts: int = 4):
@@ -647,13 +483,8 @@ def queue_wait_stream(spark, sf_dir: str, parts: int = 4):
             "min_us": min_us, "max_done_us": max_done,
         }])
 
-    raw = (
-        spark.readStream.schema(
-            "event_type STRING, event_id BIGINT, us BIGINT, "
-            "svc_us BIGINT")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src_dir)
-    )
+    raw = read_slices(spark, src_dir, "event_type STRING, event_id BIGINT, "
+                      "us BIGINT, svc_us BIGINT")
     updates = raw.groupBy("event_type").applyInPandasWithState(
         fold,
         outputStructType=out_schema,
@@ -692,23 +523,18 @@ def vocab_growth_stream(spark, sf_dir: str, parts: int = 4):
     map-side, probes the persisted TERM STORE for already-seen terms,
     appends only the genuinely new ones (``terms.b{id}``, idempotent
     per-batch dirs), and records a per-batch growth row — tokens
-    arrived, distinct terms in batch, NEW terms.  The current batch's
-    own dirs are excluded from the store view on retry (the
-    ``_image_dedup_merge_batch`` at-least-once rule).  Arrival order
+    arrived, distinct terms in batch, NEW terms.  Only EARLIER
+    batches' dirs form the store view, so a retry never probes its own
+    dir (the ``_image_dedup_merge_batch`` at-least-once rule).  Arrival order
     is (doc_id % parts, doc_id), oracle-reproducible, so the DuckDB
     oracle computes each term's arrival-key minimum closed-form.  At
     100 TB the term store is a bucketed string column probed by an
     equi-join — the live vocab monitor a tokenizer-budget owner
     watches during ingestion."""
-    import glob as _glob
-
     from pyspark.sql import functions as F
+    from pyspark.sql.window import Window
 
-    src_dir = _stage_docs_with_text_by_mod(spark, sf_dir, parts)
-    out = tempfile.mkdtemp(prefix="dtm_stream_vocab_")
-    chk = os.path.join(out, "chk")
-
-    def merge(batch_df, batch_id):
+    def merge(out, batch_df, batch_id):
         sess = batch_df.sparkSession
         toks = batch_df.select(
             F.explode(F.expr(
@@ -718,13 +544,9 @@ def vocab_growth_stream(spark, sf_dir: str, parts: int = 4):
         n_tokens = toks.count()
         batch_terms = toks.distinct()
         batch_terms.createOrReplaceTempView("__vocab_batch")
-        store_dirs = [
-            p for p in sorted(_glob.glob(os.path.join(out, "terms.b*")))
-            if not p.endswith(f"terms.b{batch_id}")
-        ]
-        if store_dirs:
-            sess.read.parquet(*store_dirs).createOrReplaceTempView(
-                "__vocab_store")
+        store = read_batch_dirs(sess, out, "terms", below=batch_id)
+        if store is not None:
+            store.createOrReplaceTempView("__vocab_store")
             new_terms = sess.sql(
                 "SELECT b.tok FROM __vocab_batch b LEFT ANTI JOIN"
                 " __vocab_store s ON s.tok = b.tok")
@@ -744,24 +566,13 @@ def vocab_growth_stream(spark, sf_dir: str, parts: int = 4):
         (row.coalesce(1).write.mode("overwrite")
          .parquet(os.path.join(out, f"growth.b{batch_id}")))
 
-    raw = (
-        spark.readStream.schema("doc_id BIGINT, text STRING")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src_dir)
-    )
-    q = (
-        raw.writeStream.foreachBatch(merge)
-        .option("checkpointLocation", chk)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    growth = sorted(_glob.glob(os.path.join(out, "growth.b*")))
-    if not growth:
+    out = run_foreach_batch(
+        read_slices(spark, _stage_docs_with_text_by_mod(spark, sf_dir, parts),
+                    "doc_id BIGINT, text STRING"),
+        merge, "dtm_stream_vocab_")
+    g = read_batch_dirs(spark, out, "growth")
+    if g is None:
         raise RuntimeError("streaming vocab growth produced no rows")
-    from pyspark.sql.window import Window
-
-    g = spark.read.parquet(*growth)
     w = (Window.orderBy("batch_id")
          .rowsBetween(Window.unboundedPreceding, Window.currentRow))
     return g.select(
@@ -776,44 +587,12 @@ def _stage_docs_with_text_by_mod(spark, sf_dir: str,
     strictly increasing mtimes) carrying the TEXT column — staged
     separately because the band-store stream's slices are
     deliberately text-free."""
-    import hashlib
-
-    src = os.path.realpath(f"{sf_dir}/documents.parquet")
-    tag = hashlib.md5(src.encode()).hexdigest()[:12]
-    d = f"/tmp/duckdb_title_mapper_spark_stream/{tag}_doctext{parts}"
-    done = f"{d}/.staged"
-    if os.path.exists(done):
-        return d
-
     from pyspark.sql import functions as F
 
-    docs = load_table(spark, sf_dir, "documents").select(
-        "doc_id", "text")
-    os.makedirs(d, exist_ok=True)
-    staged_rows = 0
-    for p in range(parts):
-        sliced = docs.where(F.col("doc_id") % parts == p)
-        staged_rows += sliced.count()
-        (sliced.coalesce(1)
-         .write.mode("overwrite")
-         .parquet(f"{d}/_build_{p}"))
-        part_file = next(
-            f for f in os.listdir(f"{d}/_build_{p}")
-            if f.endswith(".parquet"))
-        os.replace(f"{d}/_build_{p}/{part_file}", f"{d}/slice_{p}.parquet")
-        shutil.rmtree(f"{d}/_build_{p}", ignore_errors=True)
-    import time as _time
-
-    base = _time.time()
-    for p in range(parts):
-        os.utime(f"{d}/slice_{p}.parquet", (base + p, base + p))
-    total = docs.count()
-    if staged_rows != total:
-        raise AssertionError(
-            f"doc staging lost rows: staged {staged_rows} of {total}")
-    with open(done, "w") as f:
-        f.write("ok")
-    return d
+    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
+    return stage_slices(
+        stage_path(sf_dir, "documents", f"doctext{parts}"),
+        docs.withColumn("slice", F.col("doc_id") % parts), parts)
 
 
 def _stage_docs_by_mod(spark, sf_dir: str, parts: int = 4) -> str:
@@ -823,55 +602,15 @@ def _stage_docs_by_mod(spark, sf_dir: str, parts: int = 4) -> str:
     modulo split is PORTABLE: the DuckDB oracle can reproduce the
     arrival order (slice index, then doc_id) exactly, which a
     murmur3-hash split could not.  A staged-row-count assertion keeps
-    the totality contract loud anyway."""
-    import hashlib
-
+    the totality contract loud anyway.  Arrival semantics, unlike the
+    ADD/OR-monoid sketch streams, are order-dependent: the stager's
+    increasing mtimes make micro-batch order the slice order."""
     from pyspark.sql import functions as F
 
-    src = os.path.realpath(f"{sf_dir}/documents.parquet")
-    tag = hashlib.md5(src.encode()).hexdigest()[:12]
-    d = f"/tmp/duckdb_title_mapper_spark_stream/{tag}_docmod{parts}"
-    done = f"{d}/.staged"
-    if os.path.exists(done):
-        return d
-
-    docs = load_table(spark, sf_dir, "documents").select(
-        "doc_id", "source")
-    os.makedirs(d, exist_ok=True)
-    staged_rows = 0
-    for p in range(parts):
-        sliced = docs.where(F.col("doc_id") % parts == p)
-        staged_rows += sliced.count()
-        (sliced.coalesce(1)
-         .write.mode("overwrite")
-         .parquet(f"{d}/_build_{p}"))
-        part_file = next(
-            f for f in os.listdir(f"{d}/_build_{p}")
-            if f.endswith(".parquet"))
-        os.replace(f"{d}/_build_{p}/{part_file}", f"{d}/slice_{p}.parquet")
-        shutil.rmtree(f"{d}/_build_{p}", ignore_errors=True)
-    # the file stream picks oldest-modified first; stamp strictly
-    # increasing mtimes so micro-batch order IS the slice order the
-    # arrival-order oracle assumes (arrival semantics, unlike the
-    # ADD/OR-monoid sketch streams, are order-dependent)
-    import time as _time
-
-    base = _time.time()
-    for p in range(parts):
-        os.utime(f"{d}/slice_{p}.parquet", (base + p, base + p))
-    total = docs.count()
-    if staged_rows != total:
-        raise AssertionError(
-            f"doc staging lost rows: staged {staged_rows} of {total}")
-    with open(done, "w") as f:
-        f.write("ok")
-    return d
-
-
-def _image_dedup_dirs(out: str, name: str):
-    import glob as _glob
-
-    return sorted(_glob.glob(os.path.join(out, f"{name}.b*")))
+    docs = load_table(spark, sf_dir, "documents").select("doc_id", "source")
+    return stage_slices(
+        stage_path(sf_dir, "documents", f"docmod{parts}"),
+        docs.withColumn("slice", F.col("doc_id") % parts), parts)
 
 
 def _image_dedup_merge_batch(out: str, batch_df, batch_id) -> None:
@@ -896,13 +635,9 @@ def _image_dedup_merge_batch(out: str, batch_df, batch_id) -> None:
     # dir (not just doc_id != self) is required because same-batch
     # pairs must be judged by the intra-batch b.doc_id < a.doc_id arm,
     # never by the store arm.
-    store_dirs = [
-        p for p in _image_dedup_dirs(out, "bands")
-        if not p.endswith(f"bands.b{batch_id}")
-    ]
-    if store_dirs:
-        sess.read.parquet(*store_dirs).createOrReplaceTempView(
-            "__img_store")
+    store = read_batch_dirs(sess, out, "bands", below=batch_id)
+    if store is not None:
+        store.createOrReplaceTempView("__img_store")
         store_probe = """
           UNION ALL
           SELECT a.doc_id AS da, b.doc_id AS db
@@ -979,30 +714,15 @@ def image_dedup_stream(spark, sf_dir: str, parts: int = 4):
     production near-dup gate fronts an ingestion firehose."""
     from pyspark.sql import functions as F
 
-    src_dir = _stage_docs_by_mod(spark, sf_dir, parts)
-    out = tempfile.mkdtemp(prefix="dtm_stream_imgdedup_")
-    chk = os.path.join(out, "chk")
-
-    def merge(batch_df, batch_id):
-        _image_dedup_merge_batch(out, batch_df, batch_id)
-
-    raw = (
-        spark.readStream.schema("doc_id BIGINT, source STRING")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src_dir)
-    )
-    q = (
-        raw.writeStream.foreachBatch(merge)
-        .option("checkpointLocation", chk)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    flag_dirs = _image_dedup_dirs(out, "flags")
-    if not flag_dirs:
+    out = run_foreach_batch(
+        read_slices(spark, _stage_docs_by_mod(spark, sf_dir, parts),
+                    "doc_id BIGINT, source STRING"),
+        _image_dedup_merge_batch, "dtm_stream_imgdedup_")
+    flags = read_batch_dirs(spark, out, "flags")
+    if flags is None:
         raise RuntimeError("streaming image dedup produced no flags")
     return (
-        spark.read.parquet(*flag_dirs)
+        flags
         .groupBy("source")
         .agg(
             F.count("*").cast("bigint").alias("n_images"),
@@ -1018,44 +738,12 @@ def _stage_embeddings_by_mod(spark, sf_dir: str, parts: int = 4) -> str:
     embeddings table: ``vec_id % parts`` slices with strictly
     increasing mtimes so the availableNow file stream replays slice i
     as micro-batch i."""
-    import hashlib
-
     from pyspark.sql import functions as F
 
-    src = os.path.realpath(f"{sf_dir}/embeddings.parquet")
-    tag = hashlib.md5(src.encode()).hexdigest()[:12]
-    d = f"/tmp/duckdb_title_mapper_spark_stream/{tag}_embmod{parts}"
-    done = f"{d}/.staged"
-    if os.path.exists(done):
-        return d
-
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", "embedding")
-    os.makedirs(d, exist_ok=True)
-    staged_rows = 0
-    for p in range(parts):
-        sliced = emb.where(F.col("vec_id") % parts == p)
-        staged_rows += sliced.count()
-        (sliced.coalesce(1)
-         .write.mode("overwrite")
-         .parquet(f"{d}/_build_{p}"))
-        part_file = next(
-            f for f in os.listdir(f"{d}/_build_{p}")
-            if f.endswith(".parquet"))
-        os.replace(f"{d}/_build_{p}/{part_file}", f"{d}/slice_{p}.parquet")
-        shutil.rmtree(f"{d}/_build_{p}", ignore_errors=True)
-    import time as _time
-
-    base = _time.time()
-    for p in range(parts):
-        os.utime(f"{d}/slice_{p}.parquet", (base + p, base + p))
-    total = emb.count()
-    if staged_rows != total:
-        raise AssertionError(
-            f"embedding staging lost rows: staged {staged_rows} of {total}")
-    with open(done, "w") as f:
-        f.write("ok")
-    return d
+    emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
+    return stage_slices(
+        stage_path(sf_dir, "embeddings", f"embmod{parts}"),
+        emb.withColumn("slice", F.col("vec_id") % parts), parts)
 
 
 def ann_assign_stream(spark, sf_dir: str, parts: int = 4):
@@ -1073,21 +761,15 @@ def ann_assign_stream(spark, sf_dir: str, parts: int = 4):
     assignment closed-form with batch id = arrival slice.  At 100 TB
     this is exactly how an IVF index ingests a firehose: constant
     centroid broadcast, map-side argmax, append-only postings."""
-    import glob as _glob
-
     from ..operators.similarity import ivf_assign_sql, ivf_cents_sql
 
-    src_dir = _stage_embeddings_by_mod(spark, sf_dir, parts)
-    out = tempfile.mkdtemp(prefix="dtm_stream_annassign_")
-    chk = os.path.join(out, "chk")
-    cents_dir = os.path.join(out, "cents")
-
     # parquet-backed centroids, built once before the stream starts
+    cents_dir = tempfile.mkdtemp(prefix="dtm_stream_anncents_")
     register_views(spark, sf_dir, "embeddings")
     (spark.sql(ivf_cents_sql(True, "embeddings"))
      .coalesce(1).write.mode("overwrite").parquet(cents_dir))
 
-    def merge(batch_df, batch_id):
+    def merge(out, batch_df, batch_id):
         sess = batch_df.sparkSession
         batch_df.createOrReplaceTempView("__ann_batch")
         sess.read.parquet(cents_dir).createOrReplaceTempView(
@@ -1100,23 +782,14 @@ def ann_assign_stream(spark, sf_dir: str, parts: int = 4):
          .coalesce(1).write.mode("overwrite")
          .parquet(os.path.join(out, f"cells.b{batch_id}")))
 
-    raw = (
-        spark.readStream.schema(
-            "vec_id BIGINT, embedding ARRAY<FLOAT>")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src_dir)
-    )
-    q = (
-        raw.writeStream.foreachBatch(merge)
-        .option("checkpointLocation", chk)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    cells = sorted(_glob.glob(os.path.join(out, "cells.b*")))
-    if not cells:
+    out = run_foreach_batch(
+        read_slices(spark, _stage_embeddings_by_mod(spark, sf_dir, parts),
+                    "vec_id BIGINT, embedding ARRAY<FLOAT>"),
+        merge, "dtm_stream_annassign_")
+    cells = read_batch_dirs(spark, out, "cells")
+    if cells is None:
         raise RuntimeError("streaming ANN assignment produced no cells")
-    return spark.read.parquet(*cells).select("vec_id", "batch_id", "cell")
+    return cells.select("vec_id", "batch_id", "cell")
 
 
 def topk_leaderboard_stream(spark, sf_dir: str, parts: int = 4,
@@ -1134,15 +807,9 @@ def topk_leaderboard_stream(spark, sf_dir: str, parts: int = 4,
     (doc_id % parts, doc_id) arrival order.  Ties (count DESC, term
     ASC).  At 100 TB the per-batch count relations are bucketed
     parquet and the prefix merge is one ADD-shuffle per trigger."""
-    import glob as _glob
-
     from pyspark.sql import functions as F
 
-    src_dir = _stage_docs_with_text_by_mod(spark, sf_dir, parts)
-    out = tempfile.mkdtemp(prefix="dtm_stream_topk_")
-    chk = os.path.join(out, "chk")
-
-    def merge(batch_df, batch_id):
+    def merge(out, batch_df, batch_id):
         sess = batch_df.sparkSession
         toks = batch_df.select(
             F.explode(F.expr(
@@ -1152,11 +819,8 @@ def topk_leaderboard_stream(spark, sf_dir: str, parts: int = 4,
          .select("tok", F.col("count").cast("bigint").alias("cnt"))
          .coalesce(1).write.mode("overwrite")
          .parquet(os.path.join(out, f"counts.b{batch_id}")))
-        upto = [
-            p for p in sorted(_glob.glob(os.path.join(out, "counts.b*")))
-            if int(p.rsplit(".b", 1)[1]) <= batch_id
-        ]
-        sess.read.parquet(*upto).createOrReplaceTempView("__topk_all")
+        (read_batch_dirs(sess, out, "counts", below=batch_id + 1)
+         .createOrReplaceTempView("__topk_all"))
         board = sess.sql(
             f"SELECT CAST({int(batch_id)} AS BIGINT) AS batch_id,"
             f" tok, CAST(sum(cnt) AS BIGINT) AS cnt,"
@@ -1167,23 +831,14 @@ def topk_leaderboard_stream(spark, sf_dir: str, parts: int = 4,
         (board.coalesce(1).write.mode("overwrite")
          .parquet(os.path.join(out, f"board.b{batch_id}")))
 
-    raw = (
-        spark.readStream.schema("doc_id BIGINT, text STRING")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src_dir)
-    )
-    q = (
-        raw.writeStream.foreachBatch(merge)
-        .option("checkpointLocation", chk)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    boards = sorted(_glob.glob(os.path.join(out, "board.b*")))
-    if not boards:
+    out = run_foreach_batch(
+        read_slices(spark, _stage_docs_with_text_by_mod(spark, sf_dir, parts),
+                    "doc_id BIGINT, text STRING"),
+        merge, "dtm_stream_topk_")
+    boards = read_batch_dirs(spark, out, "board")
+    if boards is None:
         raise RuntimeError("streaming top-k produced no leaderboards")
-    return spark.read.parquet(*boards).select(
-        "batch_id", "rnk", "tok", "cnt")
+    return boards.select("batch_id", "rnk", "tok", "cnt")
 
 
 def priority_sample_stream(spark, sf_dir: str, parts: int = 4,
@@ -1205,14 +860,9 @@ def priority_sample_stream(spark, sf_dir: str, parts: int = 4,
     point.  Estimator columns match the batch twin: tau = (k+1)-th
     priority, est = greatest(w, tau), true total from the summed
     batch totals."""
-    import glob as _glob
-
-    src_dir = _stage_orders_by_hash(spark, sf_dir, parts)
-    out = tempfile.mkdtemp(prefix="dtm_stream_prio_")
-    chk = os.path.join(out, "chk")
     scale = 4294967296
 
-    def merge(batch_df, batch_id):
+    def merge(out, batch_df, batch_id):
         sess = batch_df.sparkSession
         batch_df.createOrReplaceTempView("__prio_batch")
         (sess.sql(f"""
@@ -1232,24 +882,15 @@ def priority_sample_stream(spark, sf_dir: str, parts: int = 4,
          .coalesce(1).write.mode("overwrite")
          .parquet(os.path.join(out, f"tot.b{batch_id}")))
 
-    raw = (
-        spark.readStream.schema("okey BIGINT, w_cents BIGINT")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src_dir)
-    )
-    q = (
-        raw.writeStream.foreachBatch(merge)
-        .option("checkpointLocation", chk)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    tops = sorted(_glob.glob(os.path.join(out, "top.b*")))
-    tots = sorted(_glob.glob(os.path.join(out, "tot.b*")))
-    if not tops:
+    out = run_foreach_batch(
+        read_slices(spark, _stage_orders_by_hash(spark, sf_dir, parts),
+                    "okey BIGINT, w_cents BIGINT"),
+        merge, "dtm_stream_prio_")
+    tops = read_batch_dirs(spark, out, "top")
+    if tops is None:
         raise RuntimeError("streaming priority sample landed nothing")
-    spark.read.parquet(*tops).createOrReplaceTempView("__prio_tops")
-    spark.read.parquet(*tots).createOrReplaceTempView("__prio_tots")
+    tops.createOrReplaceTempView("__prio_tops")
+    read_batch_dirs(spark, out, "tot").createOrReplaceTempView("__prio_tots")
     return spark.sql(f"""WITH r AS (
       SELECT okey, w_cents, prio,
              CAST(row_number() OVER (ORDER BY prio DESC, okey)
@@ -1272,94 +913,36 @@ def _stage_orders_by_hash(spark, sf_dir: str, parts: int = 4) -> str:
     """Stage orders as (okey, w_cents) hash slices for the priority-
     sample stream (the _stage_docs_src_by_mod idiom: md5-derived
     slice so arrival order is reproducible and source-independent)."""
-    import hashlib
-    import time as _time
-
-    src = os.path.realpath(f"{sf_dir}/orders.parquet")
-    tag = hashlib.md5(src.encode()).hexdigest()[:12]
-    d = f"/tmp/duckdb_title_mapper_spark_stream/{tag}_ordprio{parts}"
-    done = f"{d}/.staged"
-    if os.path.exists(done):
-        return d
-
     from pyspark.sql import functions as F
 
     orders = load_table(spark, sf_dir, "orders").selectExpr(
         "o_orderkey AS okey",
         "CAST(CAST(CAST(o_totalprice AS STRING) AS DECIMAL(18,2))"
         " * 100 AS BIGINT) AS w_cents")
-    os.makedirs(d, exist_ok=True)
-    hslice = ("conv(substr(md5(CAST(okey AS STRING)), 1, 8), 16, 10)"
-              f" % {parts}")
-    for p in range(parts):
-        sliced = orders.where(F.expr(hslice) == p)
-        (sliced.coalesce(1)
-         .write.mode("overwrite")
-         .parquet(f"{d}/_build_{p}"))
-        part_file = next(
-            f for f in os.listdir(f"{d}/_build_{p}")
-            if f.endswith(".parquet"))
-        os.replace(f"{d}/_build_{p}/{part_file}",
-                   f"{d}/slice_{p}.parquet")
-        shutil.rmtree(f"{d}/_build_{p}", ignore_errors=True)
-        # mtime-pinned arrival order (the staging idiom): slice p
-        # lands strictly after slice p-1
-        os.utime(f"{d}/slice_{p}.parquet", (1_600_000_000 + p,
-                                            1_600_000_000 + p))
-    with open(done, "w") as f:
-        f.write("ok")
-    _time.sleep(0.05)
-    return d
+    return stage_slices(
+        stage_path(sf_dir, "orders", f"ordprio{parts}"),
+        orders.withColumn("slice", F.expr(
+            f"conv(substr(md5(CAST(okey AS STRING)), 1, 8), 16, 10) % {parts}")),
+        parts)
 
 
 def _stage_docs_src_by_mod(spark, sf_dir: str, parts: int = 4) -> str:
     """``_stage_docs_with_text_by_mod`` carrying the SOURCE column —
-    the table-log stream commits per-source file stats."""
-    import hashlib
-
-    src = os.path.realpath(f"{sf_dir}/documents.parquet")
-    tag = hashlib.md5(src.encode()).hexdigest()[:12]
-    d = f"/tmp/duckdb_title_mapper_spark_stream/{tag}_docsrch{parts}"
-    done = f"{d}/.staged"
-    if os.path.exists(done):
-        return d
-
+    the table-log stream commits per-source file stats.  The slice is
+    md5-derived (the portable hash idiom): the testdata's doc_id stride
+    makes doc_id % parts CONSTANT per source, which would put each
+    source in exactly one commit — the hash slice spreads every source
+    across batches and the oracle reproduces it closed-form."""
     from pyspark.sql import functions as F
 
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "source", "text")
-    os.makedirs(d, exist_ok=True)
-    # md5-derived slice (the portable hash idiom): the testdata's
-    # doc_id stride makes doc_id % parts CONSTANT per source, which
-    # would put each source in exactly one commit — the hash slice
-    # spreads every source across batches and the oracle reproduces
-    # it closed-form
-    hslice = ("conv(substr(md5(CAST(doc_id AS STRING)), 1, 8), 16, 10)"
-              f" % {parts}")
-    staged_rows = 0
-    for p in range(parts):
-        sliced = docs.where(F.expr(hslice) == p)
-        staged_rows += sliced.count()
-        (sliced.coalesce(1)
-         .write.mode("overwrite")
-         .parquet(f"{d}/_build_{p}"))
-        part_file = next(
-            f for f in os.listdir(f"{d}/_build_{p}")
-            if f.endswith(".parquet"))
-        os.replace(f"{d}/_build_{p}/{part_file}", f"{d}/slice_{p}.parquet")
-        shutil.rmtree(f"{d}/_build_{p}", ignore_errors=True)
-    import time as _time
-
-    base = _time.time()
-    for p in range(parts):
-        os.utime(f"{d}/slice_{p}.parquet", (base + p, base + p))
-    total = docs.count()
-    if staged_rows != total:
-        raise AssertionError(
-            f"doc staging lost rows: staged {staged_rows} of {total}")
-    with open(done, "w") as f:
-        f.write("ok")
-    return d
+    return stage_slices(
+        stage_path(sf_dir, "documents", f"docsrch{parts}"),
+        docs.withColumn("slice", F.expr(
+            "conv(substr(md5(CAST(doc_id AS STRING)), 1, 8), 16, 10)"
+            f" % {parts}")),
+        parts)
 
 
 def table_log_stream(spark, sf_dir: str, parts: int = 4):
@@ -1376,8 +959,8 @@ def table_log_stream(spark, sf_dir: str, parts: int = 4):
     (sources/deltalog.replay_log — contiguous versions, header order,
     no dup adds) and emits one row per logged file; the DuckDB
     oracle recomputes every stat closed-form with batch id = arrival
-    slice (doc_id % parts under the mtime-pinned availableNow
-    replay).  Streaming ingest is add-only by design — compaction
+    slice (the md5 slice of ``_stage_docs_src_by_mod`` under the
+    mtime-pinned availableNow replay).  Streaming ingest is add-only by design — compaction
     (remove + merged add) is the batch maintenance job
     src_table_log_replay certifies."""
     import pandas as pd
@@ -1387,13 +970,7 @@ def table_log_stream(spark, sf_dir: str, parts: int = 4):
     from ..sources.deltalog import (
         ADD_TMPL, META_TMPL, PROTO_LINE, replay_log)
 
-    src_dir = _stage_docs_src_by_mod(spark, sf_dir, parts)
-    out = tempfile.mkdtemp(prefix="dtm_stream_tablelog_")
-    chk = os.path.join(out, "chk")
-    logdir = os.path.join(out, "_delta_log")
-    os.makedirs(logdir, exist_ok=True)
-
-    def commit(batch_df, batch_id):
+    def commit(out, batch_df, batch_id):
         stats = (batch_df.selectExpr(
             "source", "doc_id",
             "octet_length(text) + length(CAST(doc_id AS STRING)) + 22"
@@ -1415,23 +992,17 @@ def table_log_stream(spark, sf_dir: str, parts: int = 4):
                 f"part-b{int(batch_id)}-{r['source']}.json",
                 int(r["sz"]), int(r["cnt"]), int(r["mn"]), int(r["mx"])))
         blob = ("\n".join(lines) + "\n").encode()
+        logdir = os.path.join(out, "_delta_log")
+        os.makedirs(logdir, exist_ok=True)
         with open(os.path.join(logdir, f"{int(batch_id):020d}.json"),
                   "wb") as f:
             f.write(blob)
 
-    raw = (
-        spark.readStream.schema(
-            "doc_id BIGINT, source STRING, text STRING")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src_dir)
-    )
-    q = (
-        raw.writeStream.foreachBatch(commit)
-        .option("checkpointLocation", chk)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    out = run_foreach_batch(
+        read_slices(spark, _stage_docs_src_by_mod(spark, sf_dir, parts),
+                    "doc_id BIGINT, source STRING, text STRING"),
+        commit, "dtm_stream_tablelog_")
+    logdir = os.path.join(out, "_delta_log")
     log = {
         int(name.split(".")[0]): open(os.path.join(logdir, name),
                                       "rb").read()
@@ -1467,50 +1038,16 @@ def _stage_baskets_by_mod(spark, sf_dir: str, parts: int = 4) -> str:
     micro-batch and per-batch pair counts are SUM-mergeable across
     batches (disjoint baskets: the pair-count monoid).  Portable
     modulo split + pinned mtimes, the _stage_docs_by_mod discipline."""
-    import hashlib
-
-    src = os.path.realpath(f"{sf_dir}/lineitem.parquet")
-    tag = hashlib.md5(src.encode()).hexdigest()[:12]
-    d = f"/tmp/duckdb_title_mapper_spark_stream/{tag}_basket{parts}"
-    done = f"{d}/.staged"
-    if os.path.exists(done):
-        return d
+    from pyspark.sql import functions as F
 
     li = load_table(spark, sf_dir, "lineitem")
     pt = load_table(spark, sf_dir, "part")
-    li.createOrReplaceTempView("__stage_li")
-    pt.createOrReplaceTempView("__stage_pt")
-    baskets = spark.sql(
-        "SELECT DISTINCT l.l_orderkey AS ok, p.p_brand AS item "
-        "FROM __stage_li l JOIN __stage_pt p "
-        "ON l.l_partkey = p.p_partkey")
-    os.makedirs(d, exist_ok=True)
-    from pyspark.sql import functions as F
-
-    staged_rows = 0
-    for p in range(parts):
-        sliced = baskets.where(F.col("ok") % parts == p)
-        staged_rows += sliced.count()
-        (sliced.coalesce(1).write.mode("overwrite")
-         .parquet(f"{d}/_build_{p}"))
-        part_file = next(
-            f for f in os.listdir(f"{d}/_build_{p}")
-            if f.endswith(".parquet"))
-        os.replace(f"{d}/_build_{p}/{part_file}",
-                   f"{d}/slice_{p}.parquet")
-        shutil.rmtree(f"{d}/_build_{p}", ignore_errors=True)
-    import time as _time
-
-    base = _time.time()
-    for p in range(parts):
-        os.utime(f"{d}/slice_{p}.parquet", (base + p, base + p))
-    total = baskets.count()
-    if staged_rows != total:
-        raise AssertionError(
-            f"basket staging lost rows: staged {staged_rows} of {total}")
-    with open(done, "w") as f:
-        f.write("ok")
-    return d
+    baskets = (li.join(pt, li.l_partkey == pt.p_partkey)
+               .select(li.l_orderkey.alias("ok"), pt.p_brand.alias("item"))
+               .distinct())
+    return stage_slices(
+        stage_path(sf_dir, "lineitem", f"basket{parts}"),
+        baskets.withColumn("slice", F.col("ok") % parts), parts)
 
 
 def assoc_pairs_stream(spark, sf_dir: str, parts: int = 4):
@@ -1527,15 +1064,9 @@ def assoc_pairs_stream(spark, sf_dir: str, parts: int = 4):
     the bounded per-basket fan-out join, and the store merge is one
     hash-agg over attribute-cardinality keys — the standing
     frequent-pattern monitor of an ingestion pipeline."""
-    import glob as _glob
-
     from pyspark.sql import functions as F
 
-    src_dir = _stage_baskets_by_mod(spark, sf_dir, parts)
-    out = tempfile.mkdtemp(prefix="dtm_stream_assoc_")
-    chk = os.path.join(out, "chk")
-
-    def merge(batch_df, batch_id):
+    def merge(out, batch_df, batch_id):
         sess = batch_df.sparkSession
         batch_df.createOrReplaceTempView("__assoc_batch")
         pairs = sess.sql(
@@ -1554,24 +1085,14 @@ def assoc_pairs_stream(spark, sf_dir: str, parts: int = 4):
         (row.coalesce(1).write.mode("overwrite")
          .parquet(os.path.join(out, f"census.b{batch_id}")))
 
-    raw = (
-        spark.readStream.schema("ok BIGINT, item STRING")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src_dir)
-    )
-    q = (
-        raw.writeStream.foreachBatch(merge)
-        .option("checkpointLocation", chk)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    pair_dirs = sorted(_glob.glob(os.path.join(out, "pairs.b*")))
-    census_dirs = sorted(_glob.glob(os.path.join(out, "census.b*")))
-    if not pair_dirs or not census_dirs:
+    out = run_foreach_batch(
+        read_slices(spark, _stage_baskets_by_mod(spark, sf_dir, parts),
+                    "ok BIGINT, item STRING"),
+        merge, "dtm_stream_assoc_")
+    store = read_batch_dirs(spark, out, "pairs")
+    census = read_batch_dirs(spark, out, "census")
+    if store is None or census is None:
         raise RuntimeError("streaming assoc pairs produced no store")
-    store = spark.read.parquet(*pair_dirs)
-    census = spark.read.parquet(*census_dirs)
     tot = census.agg(
         F.sum("n_baskets").cast("bigint").alias("n_baskets"))
     return (
@@ -1593,53 +1114,17 @@ def _stage_events_by_hour(spark, sf_dir: str, parts: int = 4) -> str:
     and per-type hours arrive in time order across batches — the
     alignment an incremental hourly-rollup consumer needs (an
     event-time quantile split can cut an hour in half)."""
-    import hashlib
-
-    src = os.path.realpath(f"{sf_dir}/events.parquet")
-    tag = hashlib.md5(src.encode()).hexdigest()[:12]
-    d = f"/tmp/duckdb_title_mapper_spark_stream/{tag}_hourly{parts}"
-    done = f"{d}/.staged"
-    if os.path.exists(done):
-        return d
+    from pyspark.sql import functions as F
 
     ev = load_events(spark, sf_dir).selectExpr(
         "event_type", "unix_micros(ts) div 3600000000 AS h")
-    ev.createOrReplaceTempView("__stage_ev_hourly")
-    sliced_all = spark.sql(f"""
-      SELECT event_type, h,
-             CAST(((h - mn) * {parts}) div (mx - mn + 1) AS INT)
-               AS slice
-      FROM __stage_ev_hourly
-      CROSS JOIN (SELECT min(h) AS mn, max(h) AS mx
-                  FROM __stage_ev_hourly) b""")
-    os.makedirs(d, exist_ok=True)
-    from pyspark.sql import functions as F
-
-    staged_rows = 0
-    for p in range(parts):
-        sliced = sliced_all.where(F.col("slice") == p).select(
-            "event_type", "h")
-        staged_rows += sliced.count()
-        (sliced.coalesce(1).write.mode("overwrite")
-         .parquet(f"{d}/_build_{p}"))
-        part_file = next(
-            f for f in os.listdir(f"{d}/_build_{p}")
-            if f.endswith(".parquet"))
-        os.replace(f"{d}/_build_{p}/{part_file}",
-                   f"{d}/slice_{p}.parquet")
-        shutil.rmtree(f"{d}/_build_{p}", ignore_errors=True)
-    import time as _time
-
-    base = _time.time()
-    for p in range(parts):
-        os.utime(f"{d}/slice_{p}.parquet", (base + p, base + p))
-    total = ev.count()
-    if staged_rows != total:
-        raise AssertionError(
-            f"hourly staging lost rows: staged {staged_rows} of {total}")
-    with open(done, "w") as f:
-        f.write("ok")
-    return d
+    span = ev.agg(F.min("h").alias("mn"), F.max("h").alias("mx"))
+    return stage_slices(
+        stage_path(sf_dir, "events", f"hourly{parts}"),
+        ev.crossJoin(span).selectExpr(
+            "event_type", "h",
+            f"CAST(((h - mn) * {parts}) div (mx - mn + 1) AS INT) AS slice"),
+        parts)
 
 
 def holt_stream(spark, sf_dir: str, parts: int = 4, pool: int = 48):
@@ -1693,11 +1178,7 @@ def holt_stream(spark, sf_dir: str, parts: int = 4, pool: int = 48):
             "level_s3": l, "trend_s3": b, "forecast_s3": l + b,
         }])
 
-    raw = (
-        spark.readStream.schema("event_type STRING, h BIGINT")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src_dir)
-    )
+    raw = read_slices(spark, src_dir, "event_type STRING, h BIGINT")
     updates = raw.groupBy("event_type").applyInPandasWithState(
         fold,
         outputStructType=out_schema,

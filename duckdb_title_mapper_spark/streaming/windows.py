@@ -527,71 +527,102 @@ def _stage_sentinel_dir(spark, sf_dir: str, ts_t: str) -> str:
     RESERVED ``event_id = -1`` — the sentinel predicate; real event_ids
     are non-negative by schema).  Each sentinel file arrives in its own
     micro-batch (maxFilesPerTrigger=1; the file source orders by
-    modification time and the freshly written sentinels are newest),
+    modification time and the freshly staged sentinels are newest),
     pushing BOTH sides' event-time watermarks 40/41 days past the real
     data — which is what lets an OUTER stream-stream join evict every
     pending left-side row and emit its null-matches.  Two files because
     availableNow runs no trailing no-data micro-batch and eviction in
     batch N uses the watermark computed after batch N-1: the first
     sentinel advances the watermark, the SECOND's batch performs the
-    final eviction under it (details at the staging loop below).
-    Without the sentinels the stream ends with the last
+    final eviction under it (sentinel #1 alone leaves the last
+    (watermark + horizon) of real rows parked — measured: 10 rows at
+    sf0.01).  Without the sentinels the stream ends with the last
     (watermark + horizon) of unmatched views parked in state forever —
-    the standard finite-replay-of-an-infinite-operator trick."""
-    import hashlib
+    the standard finite-replay-of-an-infinite-operator trick.
+
+    The events file is a symlink (no data copied); the sentinels are
+    the stager's ``slice_0``/``slice_1`` (40 and 41 days past the real
+    maximum), whose mtimes are newer than the real file's."""
     import os
 
     from pyspark.sql import functions as F
 
     from ..sources.tables import load_events
+    from .staging import stage_path, stage_slices
 
-    src = os.path.realpath(f"{sf_dir}/events.parquet")
-    tag = hashlib.md5(src.encode()).hexdigest()[:12]
-    d = f"/tmp/duckdb_title_mapper_spark_stream/{tag}_sentinel_{ts_t}"
-    done = f"{d}/.staged"
-    if os.path.exists(done):
-        return d
+    d = stage_path(sf_dir, "events", f"sentinel_{ts_t}")
     os.makedirs(d, exist_ok=True)
     try:
-        os.symlink(src, f"{d}/events.parquet")
+        os.symlink(os.path.realpath(f"{sf_dir}/events.parquet"),
+                   f"{d}/events.parquet")
     except FileExistsError:
         pass
-    max_us = (
-        load_events(spark, sf_dir)
-        .agg(F.max(F.unix_micros("ts")))
-        .first()[0]
+    far_us = "mx + CAST(40 + slice AS BIGINT) * 86400000000"
+    ts_expr = (
+        f"({far_us}) * 1000"
+        if ts_t == "bigint"
+        else f"CAST(timestamp_micros({far_us}) AS TIMESTAMP_NTZ)"
     )
-    # TWO sentinel batches: availableNow does not run a trailing no-data
-    # micro-batch, and state eviction in batch N uses the watermark
-    # computed after batch N-1 — so sentinel #1 alone leaves the last
-    # (watermark + horizon) of real rows parked (measured: 10 rows at
-    # sf0.01).  Sentinel #2's batch evicts with sentinel #1's watermark,
-    # which is already 40 days past all real data.
-    now = __import__("time").time()
-    for i, day_offset in enumerate((40, 41)):
-        far_us = max_us + day_offset * 24 * 3600 * 1_000_000
-        ts_expr = (
-            f"CAST({far_us} AS BIGINT) * 1000"
-            if ts_t == "bigint"
-            else f"CAST(timestamp_micros(CAST({far_us} AS BIGINT))"
-                 f" AS TIMESTAMP_NTZ)"
+    sentinels = (
+        load_events(spark, sf_dir)
+        .agg(F.max(F.unix_micros("ts")).alias("mx"))
+        .crossJoin(spark.sql(
+            "SELECT * FROM VALUES (0), (1) AS s(slice)"
+            " CROSS JOIN VALUES ('view'), ('purchase') AS t(event_type)"))
+        .selectExpr(
+            "CAST(-1 AS BIGINT) AS event_id", f"{ts_expr} AS ts",
+            "CAST(-1 AS BIGINT) AS user_id", "event_type",
+            "CAST(0.0 AS DOUBLE) AS value", "'' AS props", "slice")
+    )
+    return stage_slices(d, sentinels, 2)
+
+
+def _sentinel_view_purchase_join(spark, sf_dir: str, how: str,
+                                 horizon_minutes: int, watermark: str):
+    """The view/purchase stream-stream join of the outer-join family over
+    the sentinel-staged events dir: watermarked ``views`` and
+    ``purchases`` from ONE file stream, joined on the same user within
+    ``horizon_minutes`` after the view.  ``how`` is the join type."""
+    from pyspark.sql import functions as F
+
+    from ..sources.tables import events_ts_read_type, normalize_events_ts
+    from .staging import read_slices
+
+    spark.conf.set("spark.sql.session.timeZone", "UTC")
+    ts_t = events_ts_read_type(spark, sf_dir)
+    schema = EVENTS_RAW_SCHEMA.replace(
+        "ts BIGINT", f"ts {'BIGINT' if ts_t == 'bigint' else 'TIMESTAMP_NTZ'}"
+    )
+    events = normalize_events_ts(
+        read_slices(spark, _stage_sentinel_dir(spark, sf_dir, ts_t), schema))
+    views = (
+        events.where(F.col("event_type") == "view")
+        .select(
+            F.col("user_id").alias("v_user"),
+            F.col("event_id").alias("view_id"),
+            F.col("ts").alias("v_ts"),
         )
-        rows = spark.sql(
-            f"""SELECT CAST(-1 AS BIGINT) AS event_id, {ts_expr} AS ts,
-                       CAST(-1 AS BIGINT) AS user_id, t.event_type,
-                       CAST(0.0 AS DOUBLE) AS value, '' AS props
-                FROM VALUES ('view'), ('purchase') AS t(event_type)"""
+        .withWatermark("v_ts", watermark)
+    )
+    purchases = (
+        events.where(F.col("event_type") == "purchase")
+        .select(
+            F.col("user_id").alias("p_user"),
+            F.col("event_id").alias("purchase_id"),
+            F.col("ts").alias("p_ts"),
         )
-        out = f"{d}/_sentinel_build"
-        rows.coalesce(1).write.mode("overwrite").parquet(out)
-        part = next(f for f in os.listdir(out) if f.endswith(".parquet"))
-        sentinel = f"{d}/zz_sentinel_{i}.parquet"
-        os.replace(f"{out}/{part}", sentinel)
-        # file source replays oldest-mtime-first: pin the order explicitly
-        os.utime(sentinel, (now + 10 * (i + 1), now + 10 * (i + 1)))
-    with open(done, "w") as f:
-        f.write("ok")
-    return d
+        .withWatermark("p_ts", watermark)
+    )
+    return views.join(
+        purchases,
+        (F.col("v_user") == F.col("p_user"))
+        & (F.col("p_ts") >= F.col("v_ts"))
+        & (
+            F.col("p_ts")
+            <= F.col("v_ts") + F.expr(f"INTERVAL {horizon_minutes} MINUTES")
+        ),
+        how,
+    )
 
 
 def left_outer_view_purchase(spark, sf_dir: str, horizon_minutes: int = 30,
@@ -614,48 +645,8 @@ def left_outer_view_purchase(spark, sf_dir: str, horizon_minutes: int = 30,
     equals the batch LEFT JOIN exactly."""
     from pyspark.sql import functions as F
 
-    from ..sources.tables import events_ts_read_type, normalize_events_ts
-
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    ts_t = events_ts_read_type(spark, sf_dir)
-    d = _stage_sentinel_dir(spark, sf_dir, ts_t)
-    schema = EVENTS_RAW_SCHEMA.replace(
-        "ts BIGINT", f"ts {'BIGINT' if ts_t == 'bigint' else 'TIMESTAMP_NTZ'}"
-    )
-    raw = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(d)
-    )
-    events = normalize_events_ts(raw)
-    views = (
-        events.where(F.col("event_type") == "view")
-        .select(
-            F.col("user_id").alias("v_user"),
-            F.col("event_id").alias("view_id"),
-            F.col("ts").alias("v_ts"),
-        )
-        .withWatermark("v_ts", watermark)
-    )
-    purchases = (
-        events.where(F.col("event_type") == "purchase")
-        .select(
-            F.col("user_id").alias("p_user"),
-            F.col("event_id").alias("purchase_id"),
-            F.col("ts").alias("p_ts"),
-        )
-        .withWatermark("p_ts", watermark)
-    )
-    joined = views.join(
-        purchases,
-        (F.col("v_user") == F.col("p_user"))
-        & (F.col("p_ts") >= F.col("v_ts"))
-        & (
-            F.col("p_ts")
-            <= F.col("v_ts") + F.expr(f"INTERVAL {horizon_minutes} MINUTES")
-        ),
-        "left_outer",
-    )
+    joined = _sentinel_view_purchase_join(
+        spark, sf_dir, "left_outer", horizon_minutes, watermark)
     # Sentinel rows (reserved event_id = -1) are NOT filtered here: a
     # left-column predicate on a left-outer join is pushable, and
     # Catalyst pushes it BELOW the views-side watermark node — which
@@ -717,48 +708,8 @@ def full_outer_view_purchase_result(spark, sf_dir: str,
     batch FULL JOIN."""
     from pyspark.sql import functions as F
 
-    from ..sources.tables import events_ts_read_type, normalize_events_ts
-
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    ts_t = events_ts_read_type(spark, sf_dir)
-    d = _stage_sentinel_dir(spark, sf_dir, ts_t)
-    schema = EVENTS_RAW_SCHEMA.replace(
-        "ts BIGINT", f"ts {'BIGINT' if ts_t == 'bigint' else 'TIMESTAMP_NTZ'}"
-    )
-    raw = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(d)
-    )
-    events = normalize_events_ts(raw)
-    views = (
-        events.where(F.col("event_type") == "view")
-        .select(
-            F.col("user_id").alias("v_user"),
-            F.col("event_id").alias("view_id"),
-            F.col("ts").alias("v_ts"),
-        )
-        .withWatermark("v_ts", watermark)
-    )
-    purchases = (
-        events.where(F.col("event_type") == "purchase")
-        .select(
-            F.col("user_id").alias("p_user"),
-            F.col("event_id").alias("purchase_id"),
-            F.col("ts").alias("p_ts"),
-        )
-        .withWatermark("p_ts", watermark)
-    )
-    joined = views.join(
-        purchases,
-        (F.col("v_user") == F.col("p_user"))
-        & (F.col("p_ts") >= F.col("v_ts"))
-        & (
-            F.col("p_ts")
-            <= F.col("v_ts") + F.expr(f"INTERVAL {horizon_minutes} MINUTES")
-        ),
-        "full_outer",
-    )
+    joined = _sentinel_view_purchase_join(
+        spark, sf_dir, "full_outer", horizon_minutes, watermark)
     out = joined.select(
         F.col("view_id"),
         F.coalesce(F.col("v_user"), F.col("p_user")).alias("user_id"),

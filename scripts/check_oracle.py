@@ -5,6 +5,11 @@ values (sorted rows, columns sorted by name).  Any inequality here would be
 a hash mismatch in CORRECTNESS_r{N}.json.
 
 Usage: python3 scripts/check_oracle.py [sf_dir] [query ...]
+
+The Spark JVM gets half the host's memory, at most 16g.  If the JVM dies
+(say, the host runs out of memory), the run stops at that query, names
+it, and exits 3 instead of failing every later query on a refused
+connection.
 """
 
 from __future__ import annotations
@@ -64,6 +69,28 @@ def canon(rows, cols):
     return [cols[i] for i in order], out
 
 
+def jvm_memory() -> str:
+    """The Spark JVM heap: half of the host's MemTotal, 1g to 16g."""
+    try:
+        with open("/proc/meminfo") as f:
+            kb = next(int(line.split()[1]) for line in f
+                      if line.startswith("MemTotal:"))
+    except (OSError, StopIteration, ValueError):
+        return "16g"
+    return f"{max(1, min(16, kb // (2 * 1024 * 1024)))}g"
+
+
+def jvm_alive(spark) -> bool:
+    """False once the py4j gateway to the Spark JVM no longer answers."""
+    from py4j.protocol import Py4JError
+
+    try:
+        spark.sparkContext._jvm.java.lang.System.currentTimeMillis()
+        return True
+    except (Py4JError, OSError):
+        return False
+
+
 def main():
     import duckdb
     from pyspark.sql import SparkSession
@@ -84,7 +111,7 @@ def main():
         .appName("check_oracle")
         .config("spark.sql.shuffle.partitions", "16")
         .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.driver.memory", "16g")
+        .config("spark.driver.memory", jvm_memory())
         .config("spark.ui.enabled", "false")
         .getOrCreate()
     )
@@ -106,6 +133,11 @@ def main():
             s_rows = [tuple(r) for r in sdf.collect()]
         except Exception as e:
             failures.append(name)
+            if not jvm_alive(spark):
+                print(f"ABORT {name}: the Spark JVM is gone, so this and "
+                      f"every later query are unchecked: {e}")
+                print(f"{len(failures)} FAILURES before the abort: {failures}")
+                sys.exit(3)
             print(f"FAIL {name}: spark error: {e}")
             continue
         if q.oracle is None:

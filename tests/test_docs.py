@@ -8,8 +8,10 @@
    guarded duplicate *helper* names — scan the module AST for them.
 
 A third scan keeps every ``@_q`` block that ``_dual``/``_shared`` can
-register folded into that narrower form, and a fourth keeps every read
-of a testdata table on ``sources/tables.py``'s loaders.
+register folded into that narrower form, a fourth keeps every read
+of a testdata table on ``sources/tables.py``'s loaders, and a fifth keeps
+stream staging, the foreachBatch run and the version-pointer store in
+their one helper each.
 """
 
 import ast
@@ -154,4 +156,53 @@ def test_copurchase_pairs_are_spelled_once():
     assert not hits, (
         "read COPURCHASE_PAIRS_SQL instead of spelling the pair join: "
         f"workload.py lines {hits}"
+    )
+
+
+# The one site of each streaming idiom: the slice stager (staging root,
+# ``.staged`` marker, ``_build_`` dirs), the foreachBatch driver and the
+# ``CURRENT`` pointer store.  ``windows._stage_stream_dir`` is the
+# symlink stager perfbench replaces from outside, so it keeps its root.
+_STREAM_HELPERS = {
+    ("streaming", "staging.py"): {"stage_path", "stage_slices"},
+    ("streaming", "windows.py"): {"_stage_stream_dir"},
+    ("streaming", "sinks.py"): {"run_foreach_batch", "current_store",
+                                "publish_version"},
+}
+_STREAM_IDIOMS = re.compile(
+    r'/tmp/duckdb_title_mapper_spark_stream|\.staged|_build_|"CURRENT"'
+    r"|foreachBatch\(")
+
+
+def test_stream_idioms_live_in_their_helpers():
+    """Outside the helpers no module spells the staging root, the
+    ``.staged`` marker, a ``_build_`` dir, the ``CURRENT`` pointer or a
+    ``foreachBatch(`` call: a stream stages through
+    ``staging.stage_slices`` and runs through ``sinks.run_foreach_batch``
+    / ``publish_version``, so a fix to either lands everywhere at once
+    (the copies had drifted: one stager lacked the row assertion, one
+    left its build dirs behind, and the pointer store double-counted a
+    redelivered ADD batch).  The memory and parquet file sinks are other
+    sinks and keep their own ``availableNow`` runs."""
+    pkg = os.path.join(REPO, "duckdb_title_mapper_spark")
+    hits = []
+    for root, _, files in os.walk(pkg):
+        for name in sorted(files):
+            if not name.endswith(".py"):
+                continue
+            path = os.path.join(root, name)
+            with open(path) as f:
+                src = f.read()
+            allowed = _STREAM_HELPERS.get(
+                (os.path.basename(root), name), set())
+            spans = [(n.lineno, n.end_lineno)
+                     for n in ast.parse(src, filename=path).body
+                     if isinstance(n, ast.FunctionDef) and n.name in allowed]
+            for i, line in enumerate(src.splitlines(), 1):
+                if (_STREAM_IDIOMS.search(line)
+                        and not any(a <= i <= b for a, b in spans)):
+                    hits.append(f"{os.path.relpath(path, REPO)}:{i}")
+    assert not hits, (
+        "stage through staging.stage_slices and run foreachBatch streams "
+        f"through sinks.run_foreach_batch / publish_version: {hits}"
     )
