@@ -636,7 +636,7 @@ def unigram_prune(spark, sf_dir: str | None = None):
     the store and this query OWNS the level-3 (prune) build."""
     if sf_dir is not None:
         levels = build_unigram_store(spark, sf_dir, level=3, force=True)
-        return levels[3]["prune"]
+        return levels[3]["__unist_prune"]
     from ..plans.materialize import materialize
 
     spans = materialize(
@@ -668,92 +668,36 @@ def unigram_prune(spark, sf_dir: str | None = None):
 # shared EM-chain store (r15 optimization)
 # ---------------------------------------------------------------------------
 
-_UNIST_CACHE: dict = {}
-
 # Store levels: 1 = spans / vocab1 / ab1 (the iteration-1 lattice
 # inputs); 2 = vocab2 / ab2 / fin2 (the full 2-iteration EM chain --
 # fin1 is a build-internal localCheckpoint, never written to the
 # store); 3 = prune (the counterfactual-loss prune decision).
 
 
-def build_unigram_store(spark, sf_dir: str, level: int = 1,
-                        force: bool = False):
-    """Build (or fetch) the parquet-backed unigram EM-chain store and
-    register every built relation as ``__unist_<name>``.
-
-    r15 optimization (guide §1.2 — remove repeated passes): FIVE
-    queries re-derived overlapping prefixes of the same deterministic
-    chain per run (estep: spans..ab1; segment: spans+vocab1; estep2:
-    spans..fin2; prune: ..+excl/loss; apply_pruned: the whole thing
-    plus two Viterbi decodes — 13 materializations).  Same
-    cross-query shared-state shape as graph.build_copurchase_pairs:
-    parquet under a versioned /tmp dir keyed by (applicationId,
-    sf_dir), rebuilt per session/run, never across runs.  Ownership
-    follows bench order: x_unigram_lm_estep owns level 1 (force),
-    x_unigram_lm_estep2 level 2, x_unigram_prune_step level 3;
-    consumers cache-hit.  ``force`` rebuilds only the TOP requested
-    level (lower levels rebuild only if missing — their content is
-    deterministic, so a newer lower level never invalidates a built
-    higher one)."""
-    import hashlib
-    import os
-
+def _store_level(spark, lv: int):
+    """The ``build(put)`` of store level ``lv``; it reads the lower
+    levels through their ``__unist_*`` views."""
     from ..plans.materialize import materialize
 
-    key = (spark.sparkContext.applicationId, os.path.realpath(sf_dir))
-    st = _UNIST_CACHE.setdefault(key, {"levels": {}, "ver": {}})
-    tag = hashlib.md5(f"{key[0]}:{key[1]}".encode()).hexdigest()[:16]
-    from ..plans.tmpstore import store_root
-
-    base = store_root("unigram")
-
-    def _reg(lv):
-        for name, df in st["levels"][lv].items():
-            df.createOrReplaceTempView(f"__unist_{name}")
-
-    def _w(lv, name, df):
-        path = f"{base}/{tag}.l{lv}.v{st['ver'][lv]}/{name}"
-        df.write.mode("overwrite").parquet(path)
-        rdf = spark.read.parquet(path)
-        st["levels"].setdefault(lv, {})[name] = rdf
-        rdf.createOrReplaceTempView(f"__unist_{name}")
-        return rdf
-
-    def _bump(lv):
-        old = st["ver"].get(lv)
-        st["ver"][lv] = (old + 1) if old is not None else 0
-        st["levels"].pop(lv, None)
-        if old is not None:
-            from ..plans.tmpstore import defer_rmtree
-
-            defer_rmtree(f"{base}/{tag}.l{lv}.v{old}")
-
-    if 1 not in st["levels"] or (force and level == 1):
-        _bump(1)
-        _w(1, "spans", spark.sql(
-            f"WITH words AS ({words_sql(True)}) {spans_sql('words')}"))
-        _w(1, "vocab1", spark.sql(vocab_sql("__unist_spans")))
-        _w(1, "ab1", spark.sql(ab_sql("__unist_spans", "__unist_vocab1")))
-    else:
-        _reg(1)
-    if level >= 2:
-        if 2 not in st["levels"] or (force and level == 2):
-            _bump(2)
+    def build(put):
+        if lv == 1:
+            put("__unist_spans", spark.sql(
+                f"WITH words AS ({words_sql(True)}) {spans_sql('words')}"))
+            put("__unist_vocab1", spark.sql(vocab_sql("__unist_spans")))
+            put("__unist_ab1", spark.sql(
+                ab_sql("__unist_spans", "__unist_vocab1")))
+        elif lv == 2:
             # fin1 has no downstream consumer outside this level
             # (only vocab2 derives from it) — checkpoint, don't store
             fin1 = materialize(spark.sql(
                 final_sql("__unist_ab1", "__unist_vocab1", True)))
             fin1.createOrReplaceTempView("__unist_fin1")
-            _w(2, "vocab2", spark.sql(vocab2_sql("__unist_fin1")))
-            _w(2, "ab2", spark.sql(
+            put("__unist_vocab2", spark.sql(vocab2_sql("__unist_fin1")))
+            put("__unist_ab2", spark.sql(
                 ab_sql("__unist_spans", "__unist_vocab2")))
-            _w(2, "fin2", spark.sql(
+            put("__unist_fin2", spark.sql(
                 final_sql("__unist_ab2", "__unist_vocab2", True)))
         else:
-            _reg(2)
-    if level >= 3:
-        if 3 not in st["levels"] or (force and level == 3):
-            _bump(3)
             # excl/loss are prune-internal: single downstream consumer
             # each beyond the prune relation, so they materialize
             # locally and only the decision relation is stored
@@ -761,8 +705,33 @@ def build_unigram_store(spark, sf_dir: str, level: int = 1,
             excl.createOrReplaceTempView("__unist_excl")
             loss = materialize(spark.sql(loss_sql("__unist_excl", True)))
             loss.createOrReplaceTempView("__unist_loss")
-            _w(3, "prune", spark.sql(
+            put("__unist_prune", spark.sql(
                 prune_sql("__unist_fin2", "__unist_loss")))
-        else:
-            _reg(3)
-    return st["levels"]
+
+    return build
+
+
+def build_unigram_store(spark, sf_dir: str, level: int = 1,
+                        force: bool = False):
+    """Build (or fetch) the parquet-backed unigram EM-chain store up to
+    ``level``, register every stored relation as ``__unist_<name>`` and
+    return ``{level: {view name: DataFrame}}``.
+
+    r15 optimization (guide §1.2 — remove repeated passes): FIVE
+    queries re-derived overlapping prefixes of the same deterministic
+    chain per run (estep: spans..ab1; segment: spans+vocab1; estep2:
+    spans..fin2; prune: ..+excl/loss; apply_pruned: the whole thing
+    plus two Viterbi decodes — 13 materializations).  Each level is
+    one ``plans/tmpstore.versioned_store`` entry, rebuilt per
+    session/run, never across runs.  Ownership follows bench order:
+    x_unigram_lm_estep owns level 1 (force), x_unigram_lm_estep2 level
+    2, x_unigram_prune_step level 3; consumers cache-hit.  ``force``
+    rebuilds only the TOP requested level (lower levels rebuild only if
+    missing — their content is deterministic, so a newer lower level
+    never invalidates a built higher one)."""
+    from ..plans.tmpstore import versioned_store
+
+    return {lv: versioned_store(spark, "unigram", sf_dir,
+                                _store_level(spark, lv), extra=(f"l{lv}",),
+                                force=force and lv == level)
+            for lv in range(1, level + 1)}

@@ -51,8 +51,6 @@ nothing to share.
 
 from __future__ import annotations
 
-_CENSUS_CACHE: dict[tuple[str, str], object] = {}
-
 CENSUS_VIEW = "__gram_census"
 
 
@@ -116,46 +114,23 @@ def build_census(spark, sf_dir: str, force: bool = False):
     it so the shared pass's cold cost is always the one being measured,
     never a cache hit.
 
-    The census persists as a PARQUET ROUND-TRIP under /tmp (versioned
-    dir per (session, sf_dir)), not as checkpoint/persist blocks: block
-    caches are session-fragile (bench.py unpersists all persistent RDDs
-    between queries as residue cleanup, which killed a localCheckpoint-
-    backed census mid-run), while a parquet scan survives any cache
-    eviction, prunes columns per consumer, and IS the documented 100 TB
-    shape — consumers scheduling against storage instead of re-scanning
-    the corpus."""
-    import hashlib
-    import os
-
+    The census persists as a PARQUET ROUND-TRIP through
+    ``plans/tmpstore.versioned_store``, not as checkpoint/persist
+    blocks: block caches are session-fragile (bench.py unpersists all
+    persistent RDDs between queries as residue cleanup, which killed a
+    localCheckpoint-backed census mid-run), while a parquet scan
+    survives any cache eviction, prunes columns per consumer, and IS
+    the documented 100 TB shape — consumers scheduling against storage
+    instead of re-scanning the corpus."""
+    from ..plans.tmpstore import versioned_store
     from ..workload import register_views
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cached = _CENSUS_CACHE.get(key)
-    if cached is not None and not force:
-        cached[0].createOrReplaceTempView(CENSUS_VIEW)
-        return cached[0]
-    register_views(spark, sf_dir, "documents")
-    tag = hashlib.md5(
-        f"{spark.sparkContext.applicationId}:{os.path.realpath(sf_dir)}"
-        .encode()
-    ).hexdigest()[:16]
-    version = (cached[1] + 1) if cached is not None else 0
-    from ..plans.tmpstore import store_root
+    def build(put):
+        register_views(spark, sf_dir, "documents")
+        put(CENSUS_VIEW, spark.sql(census_sql(True)))
 
-    base = store_root("census")
-    path = f"{base}/{tag}.v{version}"
-    spark.sql(census_sql(True)).write.mode("overwrite").parquet(path)
-    df = spark.read.parquet(path)
-    _CENSUS_CACHE[key] = (df, version)
-    if cached is not None:
-        # Defer GC of the superseded dir to interpreter exit: plans or
-        # temp views captured from the old version re-resolve the path
-        # at action time (plans/tmpstore.py).
-        from ..plans.tmpstore import defer_rmtree
-
-        defer_rmtree(f"{base}/{tag}.v{cached[1]}")
-    df.createOrReplaceTempView(CENSUS_VIEW)
-    return df
+    return versioned_store(spark, "census", sf_dir, build,
+                           force=force)[CENSUS_VIEW]
 
 
 def _manifest_tail(src: str) -> str:

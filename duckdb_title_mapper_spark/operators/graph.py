@@ -554,7 +554,6 @@ def hits_fixed_point(edges_df, src: str = "src", dst: str = "dst",
 # ---------------------------------------------------------------------------
 
 PAIRS_VIEW = "__copurchase_pairs"
-_PAIRS_CACHE: dict = {}
 
 # the projection every co-purchase graph query starts from: part pairs
 # sharing an order, deduplicated.  The lineitem self-join + DISTINCT is
@@ -567,7 +566,6 @@ COPURCHASE_PAIRS_SQL = (
 
 
 REDGES_VIEW = "__copurchase_redges"
-_REDGES_CACHE: dict = {}
 
 
 def build_copurchase_redges(spark, sf_dir: str, force: bool = False):
@@ -584,89 +582,42 @@ def build_copurchase_redges(spark, sf_dir: str, force: bool = False):
     consumers that only need the symmetrized edge list read
     ``.select("a", "b")`` with no further DISTINCT.
 
-    Same cross-query shared-state shape as ``build_copurchase_pairs``
-    (parquet under a versioned /tmp dir keyed by (applicationId,
-    sf_dir) — survives bench.py's clearCache; consumers schedule
-    against storage).  ``x_copurchase_census`` owns the build cost
-    (force=True); the walk/BFS/propagation family cache-hits."""
-    import hashlib
-    import os
+    Stored through ``plans/tmpstore.versioned_store``.
+    ``x_copurchase_census`` owns the build cost (force=True); the
+    walk/BFS/propagation family cache-hits."""
+    from ..plans.tmpstore import versioned_store
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cached = _REDGES_CACHE.get(key)
-    if cached is not None and not force:
-        cached[0].createOrReplaceTempView(REDGES_VIEW)
-        return cached[0]
-    pairs = build_copurchase_pairs(spark, sf_dir)
-    tag = hashlib.md5(
-        f"{spark.sparkContext.applicationId}:{os.path.realpath(sf_dir)}"
-        .encode()
-    ).hexdigest()[:16]
-    version = (cached[1] + 1) if cached is not None else 0
-    from ..plans.tmpstore import store_root
+    def build(put):
+        pairs = build_copurchase_pairs(spark, sf_dir)
+        put(REDGES_VIEW,
+            pairs.selectExpr("s AS a", "d AS b")
+            .union(pairs.selectExpr("d AS a", "s AS b"))
+            .selectExpr(
+                "a", "b",
+                "CAST(row_number() OVER (PARTITION BY a ORDER BY b)"
+                " AS BIGINT) AS rnk",
+                "CAST(count(*) OVER (PARTITION BY a) AS BIGINT) AS deg",
+            ))
 
-    base = store_root("redges")
-    path = f"{base}/{tag}.v{version}"
-    (
-        pairs.selectExpr("s AS a", "d AS b")
-        .union(pairs.selectExpr("d AS a", "s AS b"))
-        .selectExpr(
-            "a", "b",
-            "CAST(row_number() OVER (PARTITION BY a ORDER BY b)"
-            " AS BIGINT) AS rnk",
-            "CAST(count(*) OVER (PARTITION BY a) AS BIGINT) AS deg",
-        )
-        .write.mode("overwrite").parquet(path)
-    )
-    df = spark.read.parquet(path)
-    _REDGES_CACHE[key] = (df, version)
-    if cached is not None:
-        from ..plans.tmpstore import defer_rmtree
-
-        defer_rmtree(f"{base}/{tag}.v{cached[1]}")
-    df.createOrReplaceTempView(REDGES_VIEW)
-    return df
+    return versioned_store(spark, "redges", sf_dir, build,
+                           force=force)[REDGES_VIEW]
 
 
 def build_copurchase_pairs(spark, sf_dir: str, force: bool = False):
     """Build (or fetch) the parquet-backed co-purchase pair store and
     register it as the ``__copurchase_pairs`` temp view.
 
-    The grams.build_census pattern verbatim (the sanctioned CROSS-QUERY
-    shared-state shape): PARQUET round trip under a versioned /tmp dir
-    keyed by (applicationId, sf_dir) — survives bench.py's clearCache
-    between queries, prunes columns per consumer, and is the 100 TB
-    shape (consumers schedule against storage, not a repeated
-    lineitem self-join).  ``x_copurchase_census`` owns the build
-    (``force=True``) so its bench time is the honest cold cost; the
-    graph-family loops (label propagation, BFS, k-core, feature
-    propagation) cache-hit."""
-    import hashlib
-    import os
-
+    Stored through ``plans/tmpstore.versioned_store``: consumers
+    schedule against storage, not a repeated lineitem self-join.
+    ``x_copurchase_census`` owns the build (``force=True``) so its
+    bench time is the honest cold cost; the graph-family loops (label
+    propagation, BFS, k-core, feature propagation) cache-hit."""
+    from ..plans.tmpstore import versioned_store
     from ..workload import register_views
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cached = _PAIRS_CACHE.get(key)
-    if cached is not None and not force:
-        cached[0].createOrReplaceTempView(PAIRS_VIEW)
-        return cached[0]
-    register_views(spark, sf_dir, "lineitem")
-    tag = hashlib.md5(
-        f"{spark.sparkContext.applicationId}:{os.path.realpath(sf_dir)}"
-        .encode()
-    ).hexdigest()[:16]
-    version = (cached[1] + 1) if cached is not None else 0
-    from ..plans.tmpstore import store_root
+    def build(put):
+        register_views(spark, sf_dir, "lineitem")
+        put(PAIRS_VIEW, spark.sql(COPURCHASE_PAIRS_SQL))
 
-    base = store_root("copurchase")
-    path = f"{base}/{tag}.v{version}"
-    spark.sql(COPURCHASE_PAIRS_SQL).write.mode("overwrite").parquet(path)
-    df = spark.read.parquet(path)
-    _PAIRS_CACHE[key] = (df, version)
-    if cached is not None:
-        from ..plans.tmpstore import defer_rmtree
-
-        defer_rmtree(f"{base}/{tag}.v{cached[1]}")
-    df.createOrReplaceTempView(PAIRS_VIEW)
-    return df
+    return versioned_store(spark, "copurchase", sf_dir, build,
+                           force=force)[PAIRS_VIEW]

@@ -1187,8 +1187,6 @@ def extract_audio_qa(media_df, n_segments: int = 16):
 # each re-encoded + re-parsed their payloads per run, and the A/V
 # curation rollup re-did both walks the NAL/ADTS queries already do.
 
-_MEDIA_META_CACHE: dict = {}
-
 _MEDIA_META_LANES = ("h264", "aac", "wavqa")
 
 
@@ -1197,21 +1195,18 @@ def build_media_meta(spark, sf_dir: str, lane: str, force: bool = False):
     one codec lane — ``h264`` (NAL/SPS walk), ``aac`` (ADTS frame
     walk), or ``wavqa`` (PCM segment-energy QA walk).
 
-    The ``operators/grams.py build_census`` pattern applied to media
-    payloads: the encode + parse pass persists as a PARQUET ROUND-TRIP
-    under /tmp (versioned dir per (session, sf_dir, lane) — never
-    checkpoint/persist blocks, which bench.py's between-query residue
-    cleanup evicts), and consumers schedule against storage.  Each
-    lane's cold cost is owned by the declared query whose name IS the
-    walk (x_multimodal_h264_nals / x_multimodal_aac_adts /
-    x_audio_qa_gate pass ``force=True`` so best-of-N benching always
-    measures a real rebuild); x_av_curation_report cache-hits both A/V
-    lanes.  This IS the 100 TB shape: payload bytes are touched once
+    The encode + parse pass persists as a PARQUET ROUND-TRIP through
+    ``plans/tmpstore.versioned_store`` (one entry per (session, sf_dir,
+    lane), viewed as ``__media_meta_<lane>``), and consumers schedule
+    against storage.  Each lane's cold cost is owned by the declared
+    query whose name IS the walk (x_multimodal_h264_nals /
+    x_multimodal_aac_adts / x_audio_qa_gate pass ``force=True`` so
+    best-of-N benching always measures a real rebuild);
+    x_av_curation_report cache-hits both A/V lanes.  This IS the 100 TB shape: payload bytes are touched once
     per (corpus, codec), parsed metadata lands in columnar storage,
     and every downstream curation query prunes columns off that —
     payloads never re-decode per consumer."""
-    import hashlib
-    import os
+    from ..plans.tmpstore import versioned_store
 
     if lane not in _MEDIA_META_LANES:
         raise ValueError(f"unknown media-meta lane {lane!r}")
@@ -1220,25 +1215,7 @@ def build_media_meta(spark, sf_dir: str, lane: str, force: bool = False):
         "aac": lambda: extract_aac_meta(aac_media_table(spark, sf_dir)),
         "wavqa": lambda: extract_audio_qa(wav_am_media_table(spark, sf_dir)),
     }
-    key = (spark.sparkContext.applicationId, os.path.realpath(sf_dir), lane)
-    cached = _MEDIA_META_CACHE.get(key)
-    if cached is not None and not force:
-        return cached[0]
-    tag = hashlib.md5(":".join(map(str, key)).encode()).hexdigest()[:16]
-    version = (cached[1] + 1) if cached is not None else 0
-    from ..plans.tmpstore import store_root
-
-    base = store_root("media_meta")
-    path = f"{base}/{tag}.v{version}"
-    builders[lane]().write.mode("overwrite").parquet(path)
-    df = spark.read.parquet(path)
-    _MEDIA_META_CACHE[key] = (df, version)
-    if cached is not None:
-        # Defer GC of the superseded dir to interpreter exit: plans or
-        # temp views captured from the old version (e.g. the
-        # _r9_av_video view x_av_curation_report registers) re-resolve
-        # the parquet path at action time (plans/tmpstore.py).
-        from ..plans.tmpstore import defer_rmtree
-
-        defer_rmtree(f"{base}/{tag}.v{cached[1]}")
-    return df
+    view = f"__media_meta_{lane}"
+    return versioned_store(spark, "media_meta", sf_dir,
+                           lambda put: put(view, builders[lane]()),
+                           extra=(lane,), force=force)[view]

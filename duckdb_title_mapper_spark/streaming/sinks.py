@@ -19,8 +19,8 @@ from __future__ import annotations
 
 import os
 import shutil
-import tempfile
 
+from ..plans.tmpstore import scratch_dir
 from ..sources.tables import load_events, load_table, register_views
 from .staging import read_slices, stage_path, stage_slices
 from .windows import stream_events
@@ -28,7 +28,7 @@ from .windows import stream_events
 
 def run_foreach_batch(stream, per_batch, prefix: str) -> str:
     """Run ``stream`` to completion through a foreachBatch sink in a fresh
-    ``mkdtemp`` directory and return that directory.
+    ``scratch_dir`` and return that directory.
 
     ``per_batch(out, batch_df, batch_id)`` is called once per micro-batch
     (again for a redelivered one) with ``out`` the run's directory; the
@@ -37,7 +37,7 @@ def run_foreach_batch(stream, per_batch, prefix: str) -> str:
     output mode is ``update``: a streaming aggregation (the upsert) emits
     only the keys each batch changed, and a stream without aggregation
     treats update exactly as append."""
-    out = tempfile.mkdtemp(prefix=prefix)
+    out = scratch_dir(prefix)
     (stream.writeStream
      .foreachBatch(lambda batch_df, batch_id:
                    per_batch(out, batch_df, batch_id))
@@ -142,7 +142,7 @@ def file_sink_roundtrip(spark, sf_dir: str):
     would add .partitionBy(date) so downstream reads prune."""
     from pyspark.sql import functions as F
 
-    out = tempfile.mkdtemp(prefix="dtm_stream_sink_")
+    out = scratch_dir("dtm_stream_sink_")
     data_dir = os.path.join(out, "data")
     chk_dir = os.path.join(out, "chk")
     q = (
@@ -764,7 +764,7 @@ def ann_assign_stream(spark, sf_dir: str, parts: int = 4):
     from ..operators.similarity import ivf_assign_sql, ivf_cents_sql
 
     # parquet-backed centroids, built once before the stream starts
-    cents_dir = tempfile.mkdtemp(prefix="dtm_stream_anncents_")
+    cents_dir = scratch_dir("dtm_stream_anncents_")
     register_views(spark, sf_dir, "embeddings")
     (spark.sql(ivf_cents_sql(True, "embeddings"))
      .coalesce(1).write.mode("overwrite").parquet(cents_dir))

@@ -19,6 +19,8 @@ import os
 import shutil
 import time
 
+from ..plans.tmpstore import store_path
+
 
 def stage_path(sf_dir: str, table: str, name: str) -> str:
     """The staged dir ``name`` over ``{sf_dir}/{table}.parquet``: one per
@@ -31,7 +33,7 @@ def stage_path(sf_dir: str, table: str, name: str) -> str:
     ``pmod(hash(user_id))``; v3 is this stager)."""
     src = os.path.realpath(f"{sf_dir}/{table}.parquet")
     tag = hashlib.md5(src.encode()).hexdigest()[:12]
-    return f"/tmp/duckdb_title_mapper_spark_stream/{tag}_{name}_v3"
+    return store_path("stream", f"{tag}_{name}_v3")
 
 
 def stage_slices(d: str, sliced, parts: int) -> str:

@@ -28,13 +28,15 @@ EVENTS_RAW_SCHEMA = (
 def _stage_stream_dir(sf_dir: str, table: str = "events") -> str:
     """Spark's file stream source requires a *directory*; the testdata is
     one read-only parquet file.  Stage a per-sf directory of symlinks
-    under /tmp (no data copied)."""
+    under the ``stream`` store root (no data copied)."""
     import hashlib
     import os
 
+    from ..plans.tmpstore import store_path
+
     src = os.path.realpath(f"{sf_dir}/{table}.parquet")
     tag = hashlib.md5(src.encode()).hexdigest()[:12]
-    d = f"/tmp/duckdb_title_mapper_spark_stream/{tag}"
+    d = store_path("stream", tag)
     os.makedirs(d, exist_ok=True)
     link = f"{d}/{table}.parquet"
     try:

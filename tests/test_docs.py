@@ -9,9 +9,10 @@
 
 A third scan keeps every ``@_q`` block that ``_dual``/``_shared`` can
 register folded into that narrower form, a fourth keeps every read
-of a testdata table on ``sources/tables.py``'s loaders, and a fifth keeps
+of a testdata table on ``sources/tables.py``'s loaders, a fifth keeps
 stream staging, the foreachBatch run and the version-pointer store in
-their one helper each.
+their one helper each, and a sixth keeps every directory the engine
+writes on ``plans/tmpstore.py``.
 """
 
 import ast
@@ -170,7 +171,7 @@ _STREAM_HELPERS = {
                                 "publish_version"},
 }
 _STREAM_IDIOMS = re.compile(
-    r'/tmp/duckdb_title_mapper_spark_stream|\.staged|_build_|"CURRENT"'
+    r'store_path\("stream"|\.staged|_build_|"CURRENT"'
     r"|foreachBatch\(")
 
 
@@ -205,4 +206,57 @@ def test_stream_idioms_live_in_their_helpers():
     assert not hits, (
         "stage through staging.stage_slices and run foreachBatch streams "
         f"through sinks.run_foreach_batch / publish_version: {hits}"
+    )
+
+
+_DIR_IDIOMS = re.compile(
+    r'store_root\(|defer_rmtree\(|mkdtemp\(|"/tmp/duckdb_title_mapper_spark')
+
+
+def _app_keyed_caches(tree, src):
+    """Module-level ``_*_CACHE = {}`` dicts of a module that reads
+    ``applicationId`` — a per-session store of its own."""
+    if "applicationId" not in src:
+        return []
+    out = []
+    for node in tree.body:
+        targets = (node.targets if isinstance(node, ast.Assign)
+                   else [node.target] if isinstance(node, ast.AnnAssign)
+                   else [])
+        for t in targets:
+            if (isinstance(t, ast.Name) and re.fullmatch(r"_\w+_CACHE", t.id)
+                    and isinstance(node.value, (ast.Dict, ast.Call))):
+                out.append(node.lineno)
+    return out
+
+
+def test_written_dirs_live_in_tmpstore():
+    """Outside ``plans/tmpstore.py`` no module spells a store root, a
+    deferred removal, a ``mkdtemp`` or the ``/tmp`` root, and none keeps
+    a session-keyed ``_*_CACHE`` dict: a cross-query relation goes
+    through ``versioned_store``, a throwaway dir through ``scratch_dir``
+    and a persistent named dir through ``store_path``.  The six
+    hand-written stores had drifted (three keyed their cache on the raw
+    ``sf_dir`` but their files on its real path, so a second spelling
+    overwrote a live version), and the ``mkdtemp`` dirs were never
+    removed."""
+    pkg = os.path.join(REPO, "duckdb_title_mapper_spark")
+    owner = os.path.join(pkg, "plans", "tmpstore.py")
+    assert os.path.isfile(owner)
+    hits = []
+    for root, _, files in os.walk(pkg):
+        for name in sorted(files):
+            path = os.path.join(root, name)
+            if not name.endswith(".py") or path == owner:
+                continue
+            with open(path) as f:
+                src = f.read()
+            rel = os.path.relpath(path, REPO)
+            hits += [f"{rel}:{i}" for i, line in
+                     enumerate(src.splitlines(), 1) if _DIR_IDIOMS.search(line)]
+            hits += [f"{rel}:{i} (_*_CACHE)" for i in _app_keyed_caches(
+                ast.parse(src, filename=path), src)]
+    assert not hits, (
+        "write dirs through plans/tmpstore (versioned_store / scratch_dir "
+        f"/ store_path): {hits}"
     )

@@ -7,7 +7,6 @@ rebuild with force)."""
 
 from duckdb_title_mapper_spark.operators.grams import (
     CENSUS_VIEW,
-    _CENSUS_CACHE,
     build_census,
     winnow_fp_from_census_sql,
 )
@@ -64,8 +63,7 @@ def test_census_cache_reuses_and_force_rebuilds(spark):
     assert b is a  # cache hit without force
     c = build_census(spark, SF, force=True)
     assert c is not a  # the declared query always pays the build
-    key = (spark.sparkContext.applicationId, SF)
-    assert _CENSUS_CACHE[key][0] is c
+    assert build_census(spark, SF) is c  # the rebuild is the new entry
     # the view points at the cached relation
     assert spark.table(CENSUS_VIEW).columns == [
         "doc_id", "n_chars", "pos", "h8", "h8b", "h12", "g32", "g32b",

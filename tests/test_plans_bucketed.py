@@ -7,6 +7,7 @@ import hashlib
 from pyspark.sql import functions as F
 
 from duckdb_title_mapper_spark.plans import explain_str, without_aqe
+from duckdb_title_mapper_spark.plans.tmpstore import store_root
 from duckdb_title_mapper_spark.sources import load_table
 
 SF = "/root/testdata/sf0.001"
@@ -21,7 +22,7 @@ def _bucketed(spark, tbl, key):
             .write.format("parquet")
             .bucketBy(8, key)
             .sortBy(key)
-            .option("path", f"/tmp/duckdb_title_mapper_spark_io/{name}")
+            .option("path", f"{store_root('io')}/{name}")
             .mode("overwrite")
             .saveAsTable(name)
         )

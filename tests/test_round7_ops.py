@@ -1946,6 +1946,7 @@ def test_selectivity_hist_eval_python_recompute(spark):
 def test_xml_roundtrip_preserves_rows(spark):
     """The XML write+read must be row-identical on the projected
     columns, not just aggregate-identical."""
+    from duckdb_title_mapper_spark.plans.tmpstore import store_root
     from duckdb_title_mapper_spark.workload import all_queries, load
 
     all_queries()["src_xml_roundtrip"].spark_fn(spark, SF).collect()
@@ -1956,7 +1957,7 @@ def test_xml_roundtrip_preserves_rows(spark):
     back = (
         spark.read.schema(orig.schema).format("xml")
         .option("rowTag", "order")
-        .load("/tmp/duckdb_title_mapper_spark_io/orders_xml")
+        .load(f"{store_root('io')}/orders_xml")
     )
     a = sorted(map(tuple, orig.collect()))
     b = sorted(map(tuple, back.collect()))
