@@ -1,32 +1,8 @@
-"""Operator surface: each module is one family from SURVEY.md §2/§2.5."""
+"""Operator surface: each module is one family from SURVEY.md §2/§2.5.
 
-from .asof import asof_join, range_join_count  # noqa: F401
-from .clustering import assign_to_centroids, kmeans_lloyd  # noqa: F401
-from .dedup import (  # noqa: F401
-    exact_dedup,
-    minhash_lsh_candidate_pairs,
-    with_rolling_fingerprint,
-    with_simhash,
-)
-from .fuzzy import fuzzy_match_tfidf  # noqa: F401
-from .graph import connected_components  # noqa: F401
-from .multimodal import (  # noqa: F401
-    decode_media,
-    extract_features,
-    media_table,
-    resize_media,
-    sample_frames,
-)
-from .similarity import (  # noqa: F401
-    cosine_near_dup_pairs_grouped,
-    cosine_topk,
-    ivf_topk,
-    with_lsh_bucket,
-)
-from .skew import salted_join  # noqa: F401
-from .standardize import standardize_titles_df  # noqa: F401
-from .text_ops import (  # noqa: F401
-    tfidf_weights,
-    with_stemmed_tokens,
-    with_tokens,
-)
+Import the module you need (``from duckdb_title_mapper_spark.operators
+import standardize``).  This package re-exports nothing: unpickling the
+standardize UDF in a Python worker imports this package, and a
+re-export would drag every family's imports (pandas among them) into
+every worker.
+"""

@@ -101,7 +101,7 @@ def connected_components(edges_df, src: str = "src", dst: str = "dst",
                          max_iter: int = 25):
     """(vertex, component) for the undirected graph in ``edges_df``;
     component id = min vertex id in the component.  Deterministic."""
-    from pyspark.sql import functions as F
+    from pyspark.sql import Observation, functions as F
 
     from ..plans.materialize import materialize as _mat, release as _release
 
@@ -118,8 +118,6 @@ def connected_components(edges_df, src: str = "src", dst: str = "dst",
         .distinct()
         .withColumn("label", F.col("id"))
     )
-    prev_sum = None
-    changed = -1
     for _ in range(max_iter):
         # r15: broadcast the vertex-sized label relation into the
         # edge-scale join — the static post-checkpoint plan otherwise
@@ -137,48 +135,31 @@ def connected_components(edges_df, src: str = "src", dst: str = "dst",
         # same-component vertex id, so the jump join always hits and
         # the fixpoint (all labels = component min) is unchanged.
         jump = labels.selectExpr("id AS jid", "label AS jlabel")
-        # materialize BEFORE the convergence probe so the probe reads a
-        # materialized relation instead of re-deriving new_labels (also
-        # cuts the otherwise-exponential lineage growth per round)
+        # convergence flag WITHOUT a probe job: labels only ever
+        # DECREASE (least of old, neighbour min and jumped label), so a
+        # round changed nothing iff no label got smaller.  The
+        # ``count_if`` rides the round's own materialization as an
+        # ``Observation`` (materialize also cuts the otherwise-
+        # exponential lineage growth per round); it holds for any
+        # BIGINT ids, where a label-sum probe would overflow.
+        changes = Observation()
         new_labels = _mat(
             labels.join(_maybe_broadcast(neighbor_min),
                         labels.id == neighbor_min.a, "left")
             .join(_maybe_broadcast(jump), labels.label == F.col("jid"), "left")
             .select(
                 "id",
+                F.col("label").alias("old"),
                 F.least(
                     F.col("label"),
                     F.coalesce(F.col("nmin"), F.col("label")),
                     F.coalesce(F.col("jlabel"), F.col("label")),
                 ).alias("label"),
             )
+            .observe(changes, F.count_if(F.col("label") < F.col("old")).alias("n"))
+            .select("id", "label")
         )
-        # convergence probe WITHOUT the per-round join (r15, guide
-        # §2.4): hash-min labels only ever DECREASE (least of old and
-        # neighbor min), so the exact BIGINT label sum is strictly
-        # monotone and stalls iff no label changed — one aggregate
-        # over the just-materialized relation replaces the
-        # new-vs-old equi join + count.  Every in-repo caller's ids
-        # are < 2^40 with < 2^20 vertices, so the sum stays far
-        # inside int64 (no wrap, monotonicity exact).
-        probe = new_labels.agg(
-            F.sum("label"), F.max("label"), F.count("*")
-        ).collect()[0]
-        label_sum, label_max, n_vertices = probe[0], probe[1], probe[2]
-        # an empty edge relation has no vertices: max(label) is NULL
-        if (prev_sum is None and label_max is not None
-                and label_max * n_vertices >= 2**62):
-            # non-ANSI sum wraps silently; the monotone-stall probe is
-            # only exact while sum(label) provably fits int64 (r15
-            # ADVICE).  Labels only decrease, so checking the FIRST
-            # round's (max, count) bounds every later round too.
-            raise ValueError(
-                "connected_components convergence probe needs "
-                f"max(label) * n_vertices < 2^62 (got {label_max} * "
-                f"{n_vertices}); re-key vertex ids before calling"
-            )
-        changed = 0 if label_sum == prev_sum else 1
-        prev_sum = label_sum
+        changed = changes.get["n"]
         if labels is not new_labels:
             _release(labels)  # retire last round's materialization
         labels = new_labels
@@ -190,7 +171,7 @@ def connected_components(edges_df, src: str = "src", dst: str = "dst",
         # non-converged exit must be loud, not a plausible result
         raise RuntimeError(
             f"connected_components did not converge in {max_iter} rounds "
-            f"(label sum still decreasing); raise max_iter"
+            f"({changed} labels still decreasing); raise max_iter"
         )
     return labels.select(F.col("id").alias("vertex"), F.col("label").alias("component"))
 

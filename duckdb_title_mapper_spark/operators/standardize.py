@@ -6,23 +6,34 @@ tokenize -> Snowball-English stem -> TF-IDF -> cosine -> argmax against the
 ``src/utils.rs``).  NULL in -> NULL out (deliberate, documented deviation —
 the reference leaves NULL behavior undefined, SURVEY.md §1.1).
 
-Two physical strategies, same observable semantics (property-tested equal):
+One scoring body, :func:`_standardize_batches`, works on Arrow arrays the
+way the reference's scalar function works on DuckDB DataChunks
+(``lib.rs:46-70``): per batch, ``dictionary_encode`` (NULL -> NULL index),
+resolve the batch's distinct titles through the worker memo, then ``take``
+the outputs back to row order.  The Python workers that run it never
+import pandas: the body builds its output from buffers, because
+``pa.array`` imports pandas through pyarrow's pandas shim.
 
-* **v1 (UDF form)** — an Arrow-batched ``pandas_udf`` over a broadcast
-  ``(index, kb)`` pair.  Each Python worker keeps a memo from title to
-  formatted output (the reference keys its result map by input string,
-  ``utils.rs:139``), so a distinct title reaches the matching kernel at
-  most once per worker, across batches, tasks and jobs — not once per
-  batch.  The memo belongs to one broadcast value (a new index starts it
-  empty) and holds at most ``_MEMO_MAX`` titles; past that it is cleared
-  whole.  The index (~4 MB of numpy arrays) is built once on the driver
-  and broadcast once per SparkContext — the analogue of the reference's
-  temp-file memo (``utils.rs:122-135``).  This is the default: the
-  matching kernel is vectorized, the KB side is constant-size, and Spark
-  partitions provide the parallelism (the reference's rayon analogue).
+Two physical strategies run that body, same observable semantics
+(property-tested equal):
+
+* **v1 (UDF form)** — an iterator ``arrow_udf`` (``ArrowEvalPython``)
+  over a broadcast ``(index, kb)`` pair.  Each Python worker keeps a memo
+  from title to formatted output (the reference keys its result map by
+  input string, ``utils.rs:139``), so a distinct title reaches the
+  matching kernel at most once per worker, across batches, tasks and
+  jobs — not once per batch.  The memo belongs to one broadcast value (a
+  new index starts it empty) and holds at most ``_MEMO_MAX`` titles; past
+  that it is cleared whole.  The index (~4 MB of numpy arrays) is built
+  once on the driver and broadcast once per SparkContext — the analogue
+  of the reference's temp-file memo (``utils.rs:122-135``).  This is the
+  default: the matching kernel is vectorized, the KB side is
+  constant-size, and Spark partitions provide the parallelism (the
+  reference's rayon analogue).  The stream
+  (``streaming.windows.standardize_stream``) runs this UDF too.
 
 * **v2 (DataFrame form)** — ``standardize_titles_df``: distinct non-NULL
-  titles -> ``mapInPandas`` through the v1 body (same broadcast, same
+  titles -> ``mapInArrow`` through the same body (same broadcast, same
   worker memo, same kernel) -> left join back on the title.  The
   ``distinct`` is the only per-title shuffle, so the title set crosses
   the network once however often titles repeat; use it when the title
@@ -35,7 +46,8 @@ from __future__ import annotations
 from typing import Iterator, Optional
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 
 from ..functions.tfidf import TfidfIndex, build_index, best_match_indices
 from ..kb import KnowledgeBase, load_kb
@@ -52,9 +64,9 @@ _INDEX: Optional[TfidfIndex] = None
 _BROADCAST: Optional[tuple] = None
 
 # ---------------------------------------------------------------------------
-# Python-worker singletons: the v1 UDF's memo, title -> formatted output.
-# Spark reuses Python workers across tasks and jobs, and this module's state
-# lives as long as the worker.
+# Python-worker singletons: the scoring body's memo, title -> formatted
+# output.  Spark reuses Python workers across tasks and jobs, and this
+# module's state lives as long as the worker.
 # ---------------------------------------------------------------------------
 _MEMO_MAX = 65536  # titles; the same fixed size as functions/text.py's stem cache
 _MEMO: dict[str, str] = {}
@@ -81,8 +93,8 @@ def get_index() -> TfidfIndex:
 def match_titles(titles: list[str], index: TfidfIndex | None = None,
                  kb: KnowledgeBase | None = None) -> list[str]:
     """Pure-Python batch matcher (no Spark): the full M0 pipeline for a list
-    of strings.  Used by the pandas UDF on each batch's memo misses and by
-    unit tests."""
+    of strings.  Used by the scoring body on each batch's memo misses and
+    by unit tests."""
     if index is None:
         index = get_index()
     if kb is None:
@@ -103,7 +115,7 @@ def standardize_title_str(title: str) -> str:
 
 
 # ---------------------------------------------------------------------------
-# v1: Arrow-batched pandas UDF over a broadcast index
+# The scoring body, shared by v1, v2 and the stream
 # ---------------------------------------------------------------------------
 
 def _broadcast(spark):
@@ -117,19 +129,29 @@ def _broadcast(spark):
     return _BROADCAST[1]
 
 
-def _standardize_batches(value, batches: Iterator[pd.Series]) -> Iterator[pd.Series]:
-    """The v1 UDF body: standardize each batch through the worker memo.
+def _string_array(values: list[str]) -> pa.Array:
+    """``values`` (no NULLs) as a ``pa.string()`` array, built from its
+    offsets and UTF-8 bytes: ``pa.array`` would import pandas."""
+    data = [v.encode() for v in values]
+    offsets = np.zeros(len(data) + 1, dtype=np.int32)
+    np.cumsum(np.fromiter(map(len, data), np.int64, len(data)), out=offsets[1:])
+    return pa.StringArray.from_buffers(len(data), pa.py_buffer(offsets),
+                                       pa.py_buffer(b"".join(data)))
+
+
+def _standardize_batches(value, arrays: Iterator[pa.Array]) -> Iterator[pa.Array]:
+    """Standardize each Arrow string array through the worker memo.
 
     A module-level function, so the pickled UDF refers to it by name and
     every task a worker runs shares this module's ``_MEMO``."""
     global _MEMO, _MEMO_OWNER
     index, kb = value
-    for s in batches:
+    for arr in arrays:
         if _MEMO_OWNER is not value:
             _MEMO, _MEMO_OWNER = {}, value
         memo = _MEMO
-        codes, uniques = pd.factorize(s)  # NULL -> code -1
-        titles = uniques.astype(str).tolist()
+        enc = pc.dictionary_encode(arr)  # NULL -> NULL index
+        titles = enc.dictionary.to_pylist()
         outs = [memo.get(t) for t in titles]
         miss = [i for i, o in enumerate(outs) if o is None]
         if miss:
@@ -141,36 +163,34 @@ def _standardize_batches(value, batches: Iterator[pd.Series]) -> Iterator[pd.Ser
             if len(memo) + len(fresh) > _MEMO_MAX:
                 memo.clear()
             memo.update(zip(fresh[:_MEMO_MAX], scored))
-        outs.append(None)
-        yield pd.Series(np.array(outs, dtype=object).take(codes),
-                        index=s.index, dtype=object)
+        yield pc.take(_string_array(outs), enc.indices)
 
 
 def make_standardize_udf(spark):
-    """The v1 pandas UDF over the SparkContext's shared broadcast, so every
+    """The v1 Arrow UDF over the SparkContext's shared broadcast, so every
     executor Python worker deserializes the index once (not per batch)
     and repeated register() calls reuse one broadcast."""
-    from pyspark.sql.functions import pandas_udf
+    from pyspark.sql.functions import arrow_udf
     from pyspark.sql.types import StringType
 
     bc = _broadcast(spark)
 
-    @pandas_udf(StringType())
-    def standardize_title(batch_iter: Iterator[pd.Series]) -> Iterator[pd.Series]:
-        return _standardize_batches(bc.value, batch_iter)
+    @arrow_udf(StringType())
+    def standardize_title(arrays: Iterator[pa.Array]) -> Iterator[pa.Array]:
+        return _standardize_batches(bc.value, arrays)
 
     return standardize_title
 
 
 # ---------------------------------------------------------------------------
-# v2: distinct -> v1 body -> join
+# v2: distinct -> scoring body -> join
 # ---------------------------------------------------------------------------
 
 def standardize_titles_df(spark, df, title_col: str, out_col: str = "standardized_title"):
     """DataFrame form of standardize: adds ``out_col`` to ``df``.
 
-    distinct non-NULL titles -> ``mapInPandas`` through the v1 body
-    (:func:`_standardize_batches` on the shared broadcast, so the same
+    distinct non-NULL titles -> ``mapInArrow`` through
+    :func:`_standardize_batches` (on the shared broadcast, so the same
     worker memo) -> left join back on the title.  The ``distinct`` is the
     only per-title exchange; NULL titles find no match and stay NULL."""
     from pyspark.sql import functions as F
@@ -178,11 +198,11 @@ def standardize_titles_df(spark, df, title_col: str, out_col: str = "standardize
 
     bc = _broadcast(spark)
 
-    def score(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            titles = pdf["__title"]
+    def score(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for batch in batches:
+            titles = batch.column(0)
             (out,) = _standardize_batches(bc.value, [titles])
-            yield pd.DataFrame({"__title": titles, out_col: out})
+            yield pa.RecordBatch.from_arrays([titles, out], names=["__title", out_col])
 
     schema = StructType([StructField("__title", StringType()),
                          StructField(out_col, StringType())])
@@ -190,7 +210,7 @@ def standardize_titles_df(spark, df, title_col: str, out_col: str = "standardize
         df.select(F.col(title_col).alias("__title"))
         .where(F.col("__title").isNotNull())
         .distinct()
-        .mapInPandas(score, schema)
+        .mapInArrow(score, schema)
     )
     return df.join(
         title_to_out, df[title_col] == title_to_out["__title"], "left"

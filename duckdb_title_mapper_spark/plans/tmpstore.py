@@ -16,15 +16,17 @@ Three kinds, one call each:
   (the io round-trip tables, and the staged stream sources whose marker
   lets a later process reuse them).
 
-A force-rebuild supersedes a store's previous version, but Spark
-DataFrames re-resolve parquet paths at ACTION time, so a still-live
-DataFrame or temp view captured from the superseded version (a
-consumer's lazily-executed plan, or a view like ``_r9_av_video``
-registered by an earlier query) would fail with FileNotFound if the dir
-were removed at once.  Superseded versions and scratch dirs are therefore
-queued in ``_SUPERSEDED`` and removed only at interpreter exit; the
-payloads are small (KB-MB at test SFs), so holding a handful of
-generations until exit is the right trade.
+A store's version dirs serve only the process that wrote them (the key
+holds the ``applicationId``), so each is queued for removal at
+interpreter exit when it is built.  A force-rebuild supersedes a
+store's previous version, but Spark DataFrames re-resolve parquet paths
+at ACTION time, so a still-live DataFrame or temp view captured from
+the superseded version (a consumer's lazily-executed plan, or a view
+like ``_r9_av_video`` registered by an earlier query) would fail with
+FileNotFound if the dir were removed at once.  Version dirs and scratch
+dirs are therefore queued in ``_SUPERSEDED`` and removed only at
+interpreter exit; the payloads are small (KB-MB at test SFs), so
+holding a handful of generations until exit is the right trade.
 """
 
 from __future__ import annotations
@@ -88,7 +90,7 @@ def versioned_store(spark, family: str, sf_dir: str, build, *,
     writes ``df`` to ``<dir>/<name>`` as parquet (leading ``_`` dropped
     from the dir name: Spark treats such paths as hidden) and returns the
     read-back DataFrame, which a later ``put`` of the same build may
-    read.  The superseded version is queued for removal at exit.  Every
+    read.  The version dir is queued for removal at exit.  Every
     output is registered as a temp view of its own name, on a hit and
     right after its ``put``.  A hit returns the very DataFrames the
     build returned."""
@@ -102,10 +104,12 @@ def versioned_store(spark, family: str, sf_dir: str, build, *,
     tag = hashlib.md5(":".join(key).encode()).hexdigest()[:16]
     base = store_root(family)
     version = 0 if cached is None else cached[1] + 1
+    vdir = f"{base}/{tag}.v{version}"
+    defer_rmtree(vdir)
     outs: dict = {}
 
     def put(name: str, df):
-        path = f"{base}/{tag}.v{version}/{name.lstrip('_')}"
+        path = f"{vdir}/{name.lstrip('_')}"
         df.write.mode("overwrite").parquet(path)
         outs[name] = spark.read.parquet(path)
         outs[name].createOrReplaceTempView(name)
@@ -113,8 +117,6 @@ def versioned_store(spark, family: str, sf_dir: str, build, *,
 
     build(put)
     _STORES[(family, key)] = (outs, version)
-    if cached is not None:
-        defer_rmtree(f"{base}/{tag}.v{cached[1]}")
     return outs
 
 

@@ -174,7 +174,7 @@ def standardize_stream(spark, sf_dir: str):
     are maintained in complete mode.
 
     Shows the index-memoization contract (M9) holds under micro-batch
-    re-execution: the pandas UDF reuses one broadcast index across all
+    re-execution: the Arrow UDF reuses one broadcast index across all
     batches instead of rebuilding per batch."""
     from pyspark.sql import functions as F
 

@@ -11,8 +11,9 @@ A third scan keeps every ``@_q`` block that ``_dual``/``_shared`` can
 register folded into that narrower form, a fourth keeps every read
 of a testdata table on ``sources/tables.py``'s loaders, a fifth keeps
 stream staging, the foreachBatch run and the version-pointer store in
-their one helper each, and a sixth keeps every directory the engine
-writes on ``plans/tmpstore.py``.
+their one helper each, a sixth keeps every directory the engine
+writes on ``plans/tmpstore.py``, and a seventh keeps the ``operators``
+package free of submodule imports.
 """
 
 import ast
@@ -260,3 +261,19 @@ def test_written_dirs_live_in_tmpstore():
         "write dirs through plans/tmpstore (versioned_store / scratch_dir "
         f"/ store_path): {hits}"
     )
+
+
+def test_operators_package_imports_no_submodule():
+    """``operators/__init__.py`` imports none of its submodules.  Every
+    Python worker that unpickles the standardize UDF imports this
+    package; a re-export there pulled ``multimodal`` and, through it,
+    pandas into every such worker (~28 MB resident each)."""
+    path = os.path.join(REPO, "duckdb_title_mapper_spark", "operators", "__init__.py")
+    with open(path) as f:
+        tree = ast.parse(f.read(), filename=path)
+    hits = [node.lineno for node in ast.walk(tree)
+            if isinstance(node, ast.ImportFrom) and (
+                node.level or (node.module or "").startswith("duckdb_title_mapper_spark"))
+            or isinstance(node, ast.Import) and any(
+                a.name.startswith("duckdb_title_mapper_spark") for a in node.names)]
+    assert not hits, f"operators/__init__.py imports a submodule at lines {hits}"

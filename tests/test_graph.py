@@ -39,12 +39,29 @@ def test_components_long_chain_converges(spark):
 
 
 def test_components_empty_edge_relation(spark):
-    # a zero-row edge relation has no vertices: the convergence probe's
-    # max(label) is NULL, and the int64 bound check must not multiply it
+    # a zero-row edge relation has no vertices: the first round changes
+    # no label, so the loop stops there
     empty = spark.sql("SELECT CAST(1 AS BIGINT) AS src, CAST(2 AS BIGINT) AS dst").where("false")
     out = connected_components(empty)
     assert out.columns == ["vertex", "component"]
     assert out.collect() == []
+
+
+@pytest.mark.parametrize("mode", ["local", "reliable"])
+def test_components_hashed_64bit_ids(spark, monkeypatch, mode):
+    # ids near 2^62 and the BIGINT maximum, as hashed 64-bit keys give:
+    # the convergence check must not depend on the ids' magnitude (a
+    # label-sum probe overflows int64 here)
+    monkeypatch.setenv("SPARK_GRAFT_MATERIALIZE", mode)
+    top = 2**63 - 1
+    chain = [2**62 + 1_000_003 * k for k in range(6)]
+    pairs = list(zip(chain, chain[1:])) + [(top, top - 7), (top - 7, top - 3)]
+    out = {
+        r["vertex"]: r["component"]
+        for r in connected_components(_edges(spark, pairs)).collect()
+    }
+    assert out == {**{v: chain[0] for v in chain},
+                   **{v: top - 7 for v in (top, top - 7, top - 3)}}
 
 
 @pytest.mark.parametrize("name, calls", [

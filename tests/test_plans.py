@@ -111,14 +111,15 @@ def test_round2_scale_claims_hold_in_plans(spark):
     quant = qs["x_embed_quantize"].spark_fn(spark, SF)
     assert shuffle_count(quant) == 0, explain_str(quant)[:500]
 
-    # standardize scale form: distinct -> one MapInPandas scoring node ->
+    # standardize scale form: distinct -> one MapInArrow scoring node ->
     # join.  No window sort, no exploded candidate pairs, and only the
     # distinct's exchange plus the final group-by's
     scale = qs["std_documents_scale_form"].spark_fn(spark, SF)
     txt = explain_str(scale)
     simple = explain_str(scale, "simple")
     assert "Window" not in txt, txt[:800]
-    assert simple.count("MapInPandas") == 1, simple
+    assert simple.count("MapInArrow") == 1, simple
+    assert "MapInPandas" not in simple, simple
     assert "Generate" not in simple, simple
     assert shuffle_count(scale) == 2, simple
 

@@ -3,16 +3,24 @@ matching kernel at most once per Python worker, the output is exactly
 ``match_titles``'s, and eviction never loses an output the current batch
 still needs.
 
-The UDF's Python function runs in this process on pandas Series, so the
-kernel calls can be counted with a spy; one SQL test runs it in Spark's
+The UDF's Python function runs in this process on Arrow string arrays, so
+the kernel calls can be counted with a spy; one SQL test runs it in Spark's
 workers with small Arrow batches."""
 
-import pandas as pd
+import json
+import os
+import pickle
+import subprocess
+import sys
+
+import pyarrow as pa
 import pytest
 
 from goldens import AUTHORITATIVE, CORPUS_104, EDGE_CASES
 
 from duckdb_title_mapper_spark.operators import standardize as std
+
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 @pytest.fixture
@@ -33,8 +41,12 @@ def udf(spark, monkeypatch):
     return std.make_standardize_udf(spark).func, scored
 
 
+def _arrays(batches):
+    return iter(pa.array(b, type=pa.string()) for b in batches)
+
+
 def _run(func, batches):
-    return [list(out) for out in func(iter(pd.Series(b, dtype=object) for b in batches))]
+    return [out.to_pylist() for out in func(_arrays(batches))]
 
 
 def _expected(batches, index=None, kb=None):
@@ -86,8 +98,7 @@ def test_memo_resets_on_new_index(udf):
     small = std.build_index(list(kb.corpus[:500]))
     titles = list(CORPUS_104)
     full = _run(func, [titles])
-    got = [list(out) for out in std._standardize_batches(
-        (small, kb), iter([pd.Series(titles, dtype=object)]))]
+    got = [out.to_pylist() for out in std._standardize_batches((small, kb), _arrays([titles]))]
     assert len(scored) == 2 * len(titles)
     assert got == _expected([titles], small, kb)
     assert got != full
@@ -146,3 +157,91 @@ def test_sql_repeated_titles_small_batches(spark):
         spark.conf.set(key, prev)
     assert len(rows) == len(titles)
     assert all(r.s == (None if r.title is None else AUTHORITATIVE[r.title]) for r in rows)
+
+
+def _env(**extra):
+    return dict(os.environ, **extra, PYTHONPATH=os.pathsep.join(
+        [REPO] + [p for p in os.environ.get("PYTHONPATH", "").split(os.pathsep) if p]))
+
+
+_NO_PANDAS_BODY = """
+import json, pickle, sys
+sys.modules["pandas"] = None  # any import of pandas now raises
+import pyarrow as pa
+from duckdb_title_mapper_spark.operators import standardize as std
+
+with open(sys.argv[1], "rb") as f:
+    value = pickle.load(f)
+with pa.ipc.open_stream(sys.argv[2]) as r:
+    arrays = [b.column(0) for b in r]
+print(json.dumps([out.to_pylist() for out in std._standardize_batches(value, iter(arrays))]))
+"""
+
+
+def test_body_runs_without_pandas(tmp_path):
+    """The scoring body, the module and the unpickled ``(index, kb)``
+    value need no pandas: a Python worker that runs them never imports
+    it."""
+    titles = list(AUTHORITATIVE) + [None, ""]
+    with open(tmp_path / "value.pkl", "wb") as f:
+        pickle.dump((std.get_index(), std.load_kb()), f)
+    batch = pa.record_batch([pa.array(titles, type=pa.string())], names=["title"])
+    with pa.ipc.new_stream(str(tmp_path / "titles.arrow"), batch.schema) as w:
+        w.write_batch(batch)
+        w.write_batch(batch.slice(5))
+    r = subprocess.run(
+        [sys.executable, "-c", _NO_PANDAS_BODY, str(tmp_path / "value.pkl"),
+         str(tmp_path / "titles.arrow")],
+        env=_env(), capture_output=True, text=True, timeout=300)
+    assert r.returncode == 0, r.stderr[-3000:]
+    want = [AUTHORITATIVE[t] for t in AUTHORITATIVE] + [None, EDGE_CASES[""]]
+    assert json.loads(r.stdout.strip().splitlines()[-1]) == [want, want[5:]]
+
+
+_WORKER_MODULES = """
+import sys
+from pyspark.sql import SparkSession
+
+import duckdb_title_mapper_spark as engine
+from duckdb_title_mapper_spark.operators.standardize import standardize_titles_df
+from duckdb_title_mapper_spark.streaming import run_to_memory, standardize_stream
+
+sf_dir, out = sys.argv[1], sys.argv[2]
+spark = (SparkSession.builder.master("local[2]")
+         .config("spark.ui.enabled", "false")
+         .config("spark.sql.shuffle.partitions", "2").getOrCreate())
+engine.register(spark)
+titles = spark.sql("SELECT * FROM VALUES ('poet'), (NULL), (''), ('robotics engineer') AS t(title)")
+assert titles.selectExpr("standardize_title(title) AS s").count() == 4
+assert len(standardize_titles_df(spark, titles, "title").collect()) == 4
+assert run_to_memory(standardize_stream(spark, sf_dir)).count() > 0
+
+
+def probe(batches):
+    import os, sys
+    for b in batches:
+        with open(os.path.join(out, str(os.getpid())), "w") as f:
+            f.write(" ".join(str(m in sys.modules) for m in (
+                "duckdb_title_mapper_spark.operators.standardize", "pandas")))
+        yield b
+
+
+spark.range(0, 64, 1, 16).mapInArrow(probe, "id BIGINT").collect()
+"""
+
+
+def test_standardize_workers_never_import_pandas(tmp_path, sf_dir):
+    """In a fresh session that ran the v1 UDF, the v2 form and the
+    stream, every Python worker that loaded the standardize module has
+    no pandas module."""
+    out = tmp_path / "probe"
+    out.mkdir()
+    r = subprocess.run(
+        [sys.executable, "-c", _WORKER_MODULES, sf_dir, str(out)],
+        env=_env(SPARK_GRAFT_STORE_ROOT=str(tmp_path / "store")),
+        capture_output=True, text=True, timeout=600)
+    assert r.returncode == 0, r.stderr[-3000:]
+    workers = {pid: (out / pid).read_text() for pid in os.listdir(out)}
+    ran = [pid for pid, flags in workers.items() if flags.startswith("True")]
+    assert ran, workers
+    assert all(workers[pid] == "True False" for pid in ran), workers

@@ -107,3 +107,40 @@ def test_foreach_batch_dir_is_removed_at_exit(tmp_path):
     assert os.path.basename(out).startswith("dtm_stream_exit_")
     assert not os.path.exists(out)
     assert os.listdir(scratch) == []
+
+
+_STORE_BUILD = """
+import os, sys
+from pyspark.sql import SparkSession
+from duckdb_title_mapper_spark.plans.tmpstore import versioned_store
+
+spark = (SparkSession.builder.master("local[1]")
+         .config("spark.ui.enabled", "false")
+         .config("spark.sql.shuffle.partitions", "1").getOrCreate())
+out = versioned_store(spark, "exit", sys.argv[1],
+                      lambda put: put("__tmpstore_exit", spark.range(3)))
+assert out["__tmpstore_exit"].count() == 3
+print(os.path.dirname(os.path.dirname(
+    out["__tmpstore_exit"].inputFiles()[0].removeprefix("file://"))))
+"""
+
+
+def test_live_store_version_is_removed_at_exit(tmp_path):
+    """A process that built a store (never superseded) leaves no
+    ``<tag>.v0`` dir behind: no later process can read it, because the
+    key holds the writer's ``applicationId``."""
+    store = tmp_path / "store"
+    env = dict(os.environ, SPARK_GRAFT_STORE_ROOT=str(store),
+               PYTHONPATH=os.pathsep.join(
+                   [REPO] + [p for p in os.environ.get(
+                       "PYTHONPATH", "").split(os.pathsep) if p]))
+    r = subprocess.run(
+        [sys.executable, "-c", _STORE_BUILD, str(tmp_path)],
+        env=env, capture_output=True, text=True, timeout=600)
+    assert r.returncode == 0, r.stderr[-3000:]
+    vdir = r.stdout.strip().splitlines()[-1]
+    family = os.path.join(str(store), "duckdb_title_mapper_spark_exit")
+    assert os.path.dirname(vdir) == family
+    assert vdir.endswith(".v0")
+    assert not os.path.exists(vdir)
+    assert os.listdir(family) == []
