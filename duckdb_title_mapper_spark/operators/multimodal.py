@@ -30,12 +30,18 @@ promoted to tier 1 across r6):
    (H.264/HEVC motion compensation, AAC/MP3 MDCT synthesis) is the
    one remaining genuinely-library-bound layer, documented in those
    modules — on a cluster with ffmpeg, only that layer changes.
-3. The original deterministic **fake parser** (``decode_media`` with
-   ``real=False``) stays as the arithmetic-oracle form.
+3. The original deterministic **fake parser** (``decode_media``, and
+   ``resize_media``'s byte-level truncate / cycle-pad) stays as the
+   arithmetic-oracle form.
 
-Everything AROUND decode — schemas, Arrow batch iteration,
-``mapInPandas`` signatures, per-frame explode, feature vectors — is the
-same real plumbing in all three tiers.
+Everything AROUND decode is one helper per idiom, shared by all three
+tiers: ``_synth_media`` turns each ``documents`` row into one payload
+(a media table is just its ``encode(doc_id, len(text), md5(text))``),
+``_map_rows`` is the one per-row ``mapInPandas`` (input columns, a row
+function returning a tuple, a DDL schema that sets the column types),
+and ``_wav_pcm16_samples`` is the one RIFF chunk walk.
+``sample_frames`` (an explode) and ``extract_features`` (a
+``pandas_udf``) are the two other shapes.
 
 Scale notes: ``decode_media`` and ``sample_frames`` are map-side-only
 (``mapInPandas`` preserves partitioning, no shuffle); metadata
@@ -46,6 +52,7 @@ returns fixed-width ``array<float>`` ready for the operators in
 
 from __future__ import annotations
 
+import hashlib
 from typing import Iterator
 
 import pandas as pd
@@ -60,6 +67,48 @@ DECODED_SCHEMA = (
     "width INT, height INT, n_bytes INT"
 )
 FRAME_SCHEMA = "media_id BIGINT, frame_idx INT, frame BINARY"
+_MEDIA_SCHEMA = "media_id BIGINT, media_type STRING, payload BINARY"
+
+# pandas dtype per DDL column type; STRING and BINARY columns stay object
+_PD_DTYPES = {"BIGINT": "int64", "INT": "int32", "BOOLEAN": "bool"}
+
+
+def _map_rows(df, cols, row_fn, schema: str):
+    """The one per-row ``mapInPandas``: each input row's ``cols`` values
+    go to ``row_fn``, which returns the output row as a tuple in the
+    order of ``schema``, a flat DDL string of scalar columns whose types
+    set the output dtypes.  Only ``cols`` cross to Python; the output
+    stays in the input partition (no shuffle)."""
+    fields = [f.split() for f in schema.split(",")]
+    names = [f[0] for f in fields]
+    dtypes = [_PD_DTYPES.get(f[1]) for f in fields]
+
+    def work(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            rows = [row_fn(*r) for r in zip(*(pdf[c] for c in cols))]
+            values = list(zip(*rows)) if rows else [()] * len(names)
+            yield pd.DataFrame({
+                n: pd.Series(list(v), dtype=d)
+                for n, v, d in zip(names, values, dtypes)
+            })
+
+    return df.select(*cols).mapInPandas(work, schema)
+
+
+def _synth_media(spark, sf_dir: str, encode):
+    """The one media synthesizer: each ``documents`` row becomes one
+    ``(media_id, media_type, payload)`` row, ``media_id = doc_id`` and
+    ``(media_type, payload) = encode(doc_id, len(text), md5(text))``.
+    Every payload parameter is a pure function of those three, which is
+    what lets a SQL oracle recompute the decoded metadata closed-form.
+    Built map-side (Arrow binary batches)."""
+
+    def row(did, text):
+        h = hashlib.md5(text.encode()).digest()
+        return (did, *encode(did, len(text), h))
+
+    docs = load_table(spark, sf_dir, "documents")
+    return _map_rows(docs, ("doc_id", "text"), row, _MEDIA_SCHEMA)
 
 
 def media_table(spark, sf_dir: str):
@@ -145,11 +194,11 @@ def encode_wav_pcm16(rate: int, samples: list[int]) -> bytes:
     )
 
 
-def decode_wav_pcm16(payload: bytes) -> tuple[int, int, int]:
-    """Parse a mono PCM-16 WAV: (sample_rate, n_samples, sum of |sample|
-    amplitudes).  Chunk-walks the RIFF container (the real shape: fmt
-    may be followed by LIST/fact chunks before data).  Raises
-    NotImplementedError for non-PCM encodings (MP3-in-WAV etc.)."""
+def _wav_pcm16_samples(payload: bytes):
+    """The one RIFF chunk walk: (sample_rate, int16 sample array) of a
+    mono PCM-16 WAV.  fmt may be followed by LIST/fact chunks before
+    data.  Raises ValueError for a non-WAV payload or a missing chunk
+    and NotImplementedError for non-PCM encodings (MP3-in-WAV etc.)."""
     import struct
 
     import numpy as np
@@ -173,8 +222,31 @@ def decode_wav_pcm16(payload: bytes) -> tuple[int, int, int]:
         pos += 8 + sz + (sz % 2)  # RIFF chunks are 2-byte aligned
     if rate is None or data is None:
         raise ValueError("WAV missing fmt or data chunk")
-    samples = np.frombuffer(data, np.int16)
+    return rate, np.frombuffer(data, np.int16)
+
+
+def decode_wav_pcm16(payload: bytes) -> tuple[int, int, int]:
+    """Parse a mono PCM-16 WAV: (sample_rate, n_samples, sum of |sample|
+    amplitudes), through the RIFF chunk walk ``_wav_pcm16_samples``.
+    Raises NotImplementedError for non-PCM encodings (MP3-in-WAV
+    etc.)."""
+    import numpy as np
+
+    rate, samples = _wav_pcm16_samples(payload)
     return rate, len(samples), int(np.abs(samples.astype(np.int64)).sum())
+
+
+def _bmp_of(n: int, h: bytes):
+    """The md5-colored BMP of ``real_`` and ``codec_media_table``."""
+    return "image", encode_bmp24(n % 24 + 4, n % 12 + 4, (h[0], h[1], h[2]))
+
+
+def _wav_of(n: int, h: bytes):
+    """The md5-amplitude square-wave WAV of ``real_`` and
+    ``codec_media_table``."""
+    amp = h[0] * 100 + 100
+    wave = [amp if i % 2 == 0 else -amp for i in range(n % 500 + 50)]
+    return "audio", encode_wav_pcm16(8000, wave)
 
 
 def real_media_table(spark, sf_dir: str):
@@ -185,40 +257,8 @@ def real_media_table(spark, sf_dir: str):
     md5(text)), so a SQL oracle recomputes the decoded metadata exactly
     — while the payloads themselves are real files any external tool
     opens.  Built map-side via mapInPandas (Arrow binary batches)."""
-    import hashlib
-
-    docs = load_table(spark, sf_dir, "documents").select(
-        "doc_id", "text"
-    )
-
-    def build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, types, payloads = [], [], []
-            for did, text in zip(pdf["doc_id"], pdf["text"]):
-                n = len(text)
-                h = hashlib.md5(text.encode()).digest()
-                ids.append(did)
-                if did % 2 == 0:
-                    w, hh = n % 24 + 4, n % 12 + 4
-                    types.append("image")
-                    payloads.append(encode_bmp24(w, hh, (h[0], h[1], h[2])))
-                else:
-                    amp = h[0] * 100 + 100
-                    ns = n % 500 + 50
-                    wave = [amp if i % 2 == 0 else -amp for i in range(ns)]
-                    types.append("audio")
-                    payloads.append(encode_wav_pcm16(8000, wave))
-            yield pd.DataFrame(
-                {
-                    "media_id": pd.Series(ids, dtype="int64"),
-                    "media_type": types,
-                    "payload": payloads,
-                }
-            )
-
-    return docs.mapInPandas(
-        build, "media_id BIGINT, media_type STRING, payload BINARY"
-    )
+    return _synth_media(spark, sf_dir, lambda did, n, h: (
+        _bmp_of(n, h) if did % 2 == 0 else _wav_of(n, h)))
 
 
 def codec_media_table(spark, sf_dir: str):
@@ -235,54 +275,22 @@ def codec_media_table(spark, sf_dir: str):
     recomputes the decoded metadata closed-form while every payload is
     a real container/codestream an external tool opens.  Built
     map-side via mapInPandas (Arrow binary batches)."""
-    import hashlib
-
     import numpy as np
 
     from .jpeg import encode_jpeg_gray, encode_jpeg_gray_progressive
 
-    docs = load_table(spark, sf_dir, "documents").select(
-        "doc_id", "text"
-    )
+    def encode(did, n, h):
+        if did % 3 == 0:
+            return _bmp_of(n, h)
+        if did % 3 == 1:
+            return _wav_of(n, h)
+        v = (h[0] % 128) * 2  # even -> lossless reconstruction
+        enc = (encode_jpeg_gray_progressive
+               if did % 6 == 5 else encode_jpeg_gray)
+        return "image", enc(
+            np.full((n % 12 + 4, n % 24 + 4), v, dtype=np.uint8))
 
-    def build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, types, payloads = [], [], []
-            for did, text in zip(pdf["doc_id"], pdf["text"]):
-                n = len(text)
-                h = hashlib.md5(text.encode()).digest()
-                ids.append(did)
-                m = did % 3
-                if m == 0:
-                    w, hh = n % 24 + 4, n % 12 + 4
-                    types.append("image")
-                    payloads.append(encode_bmp24(w, hh, (h[0], h[1], h[2])))
-                elif m == 1:
-                    amp = h[0] * 100 + 100
-                    ns = n % 500 + 50
-                    wave = [amp if i % 2 == 0 else -amp for i in range(ns)]
-                    types.append("audio")
-                    payloads.append(encode_wav_pcm16(8000, wave))
-                else:
-                    w, hh = n % 24 + 4, n % 12 + 4
-                    v = (h[0] % 128) * 2  # even -> lossless reconstruction
-                    types.append("image")
-                    enc = (encode_jpeg_gray_progressive
-                           if did % 6 == 5 else encode_jpeg_gray)
-                    payloads.append(
-                        enc(np.full((hh, w), v, dtype=np.uint8))
-                    )
-            yield pd.DataFrame(
-                {
-                    "media_id": pd.Series(ids, dtype="int64"),
-                    "media_type": types,
-                    "payload": payloads,
-                }
-            )
-
-    return docs.mapInPandas(
-        build, "media_id BIGINT, media_type STRING, payload BINARY"
-    )
+    return _synth_media(spark, sf_dir, encode)
 
 
 def png_media_table(spark, sf_dir: str):
@@ -292,48 +300,24 @@ def png_media_table(spark, sf_dir: str):
     per-row filter cycle so every de-filter path (None/Sub/Up/Average/
     Paeth) runs on decode.  PNG is lossless, so the SQL oracle is the
     input metadata verbatim, no quantization closed-form needed."""
-    import hashlib
-
     import numpy as np
 
     from .png import encode_png
 
-    docs = load_table(spark, sf_dir, "documents").select(
-        "doc_id", "text"
-    )
+    def encode(did, n, h):
+        w, hh = n % 24 + 4, n % 12 + 4
+        if did % 2 == 0:
+            img = np.full((hh, w), h[0], dtype=np.uint8)
+        else:
+            img = np.empty((hh, w, 3), dtype=np.uint8)
+            img[:, :] = (h[0], h[1], h[2])
+        # did % 4 in (2, 3) -> Adam7 interlace (orthogonal to the
+        # gray/RGB split; lossless, so the oracle metadata is identical
+        # either way — the decoder's seven-pass reassembly runs on half
+        # the corpus)
+        return "image", encode_png(img, interlace=did % 4 >= 2)
 
-    def build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, types, payloads = [], [], []
-            for did, text in zip(pdf["doc_id"], pdf["text"]):
-                n = len(text)
-                h = hashlib.md5(text.encode()).digest()
-                w, hh = n % 24 + 4, n % 12 + 4
-                ids.append(did)
-                types.append("image")
-                if did % 2 == 0:
-                    img = np.full((hh, w), h[0], dtype=np.uint8)
-                else:
-                    img = np.empty((hh, w, 3), dtype=np.uint8)
-                    img[:, :] = (h[0], h[1], h[2])
-                # did % 4 in (2, 3) -> Adam7 interlace (orthogonal to
-                # the gray/RGB split; lossless, so the oracle metadata
-                # is identical either way — the decoder's seven-pass
-                # reassembly runs on half the corpus)
-                payloads.append(
-                    encode_png(img, interlace=did % 4 >= 2)
-                )
-            yield pd.DataFrame(
-                {
-                    "media_id": pd.Series(ids, dtype="int64"),
-                    "media_type": types,
-                    "payload": payloads,
-                }
-            )
-
-    return docs.mapInPandas(
-        build, "media_id BIGINT, media_type STRING, payload BINARY"
-    )
+    return _synth_media(spark, sf_dir, encode)
 
 
 def gif_media_table(spark, sf_dir: str):
@@ -345,43 +329,19 @@ def gif_media_table(spark, sf_dir: str):
     corpus.  GIF is lossless over palette indices, so the decoded
     level_sum has an exact closed form: w * sum_c rows(c) *
     palette_rgb_sum(c) with rows(c) = (h + 3 - c) div 4."""
-    import hashlib
-
     import numpy as np
 
     from .gif import encode_gif
 
-    docs = load_table(spark, sf_dir, "documents").select(
-        "doc_id", "text"
-    )
+    def encode(did, n, h):
+        pal = np.frombuffer(h[:12], np.uint8).reshape(4, 3)
+        idx = np.tile(
+            (np.arange(n % 12 + 4, dtype=np.uint8) % 4)[:, None],
+            (1, n % 24 + 4),
+        )
+        return "image", encode_gif(idx, pal, interlace=bool(did % 2))
 
-    def build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, types, payloads = [], [], []
-            for did, text in zip(pdf["doc_id"], pdf["text"]):
-                n = len(text)
-                h = hashlib.md5(text.encode()).digest()
-                w, hh = n % 24 + 4, n % 12 + 4
-                pal = np.frombuffer(h[:12], np.uint8).reshape(4, 3)
-                idx = np.tile(
-                    (np.arange(hh, dtype=np.uint8) % 4)[:, None], (1, w)
-                )
-                ids.append(did)
-                types.append("image")
-                payloads.append(
-                    encode_gif(idx, pal, interlace=bool(did % 2))
-                )
-            yield pd.DataFrame(
-                {
-                    "media_id": pd.Series(ids, dtype="int64"),
-                    "media_type": types,
-                    "payload": payloads,
-                }
-            )
-
-    return docs.mapInPandas(
-        build, "media_id BIGINT, media_type STRING, payload BINARY"
-    )
+    return _synth_media(spark, sf_dir, encode)
 
 
 MP4_META_SCHEMA = (
@@ -406,42 +366,20 @@ def mp4_media_table(spark, sf_dir: str):
     audio rate all pure functions of (text length, md5(text)), so a
     SQL oracle recomputes the box-walked metadata exactly while each
     payload is a real container an external demuxer walks."""
-    import hashlib
-
     from .mp4 import encode_mp4
 
-    docs = load_table(spark, sf_dir, "documents").select(
-        "doc_id", "text"
-    )
+    def encode(did, n, h):
+        return "video", encode_mp4(
+            width=(h[2] % 64 + 16) * 2,
+            height=(h[3] % 36 + 9) * 2,
+            v_codec="avc1" if did % 2 == 0 else "hvc1",
+            fps=_MP4_FPS[h[1] % 3],
+            secs=n % 30 + 1,
+            a_rate=48000 if h[4] % 2 == 0 else 44100,
+            fill=h[5],
+        )
 
-    def build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, types, payloads = [], [], []
-            for did, text in zip(pdf["doc_id"], pdf["text"]):
-                n = len(text)
-                h = hashlib.md5(text.encode()).digest()
-                ids.append(did)
-                types.append("video")
-                payloads.append(encode_mp4(
-                    width=(h[2] % 64 + 16) * 2,
-                    height=(h[3] % 36 + 9) * 2,
-                    v_codec="avc1" if did % 2 == 0 else "hvc1",
-                    fps=_MP4_FPS[h[1] % 3],
-                    secs=n % 30 + 1,
-                    a_rate=48000 if h[4] % 2 == 0 else 44100,
-                    fill=h[5],
-                ))
-            yield pd.DataFrame(
-                {
-                    "media_id": pd.Series(ids, dtype="int64"),
-                    "media_type": types,
-                    "payload": payloads,
-                }
-            )
-
-    return docs.mapInPandas(
-        build, "media_id BIGINT, media_type STRING, payload BINARY"
-    )
+    return _synth_media(spark, sf_dir, encode)
 
 
 def mp3_media_table(spark, sf_dir: str):
@@ -451,40 +389,18 @@ def mp3_media_table(spark, sf_dir: str):
     durations stay integral ms) from md5; odd doc_ids carry an ID3v2.4
     tag the frame walk must skip.  Metadata is closed-form for the SQL
     oracle; the payload is a real stream any frame-walker parses."""
-    import hashlib
-
     from .mp3 import encode_mp3
 
-    docs = load_table(spark, sf_dir, "documents").select(
-        "doc_id", "text"
-    )
+    def encode(did, n, h):
+        return "audio", encode_mp3(
+            bitrate_idx=h[1] % 14 + 1,
+            rate_idx=1 if h[2] % 2 == 0 else 2,
+            n_frames=n % 40 + 5,
+            fill=h[3],
+            id3_pad=(h[4] % 128 + 16) if did % 2 == 1 else 0,
+        )
 
-    def build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, types, payloads = [], [], []
-            for did, text in zip(pdf["doc_id"], pdf["text"]):
-                n = len(text)
-                h = hashlib.md5(text.encode()).digest()
-                ids.append(did)
-                types.append("audio")
-                payloads.append(encode_mp3(
-                    bitrate_idx=h[1] % 14 + 1,
-                    rate_idx=1 if h[2] % 2 == 0 else 2,
-                    n_frames=n % 40 + 5,
-                    fill=h[3],
-                    id3_pad=(h[4] % 128 + 16) if did % 2 == 1 else 0,
-                ))
-            yield pd.DataFrame(
-                {
-                    "media_id": pd.Series(ids, dtype="int64"),
-                    "media_type": types,
-                    "payload": payloads,
-                }
-            )
-
-    return docs.mapInPandas(
-        build, "media_id BIGINT, media_type STRING, payload BINARY"
-    )
+    return _synth_media(spark, sf_dir, encode)
 
 
 def extract_mp4_meta(media_df):
@@ -494,33 +410,13 @@ def extract_mp4_meta(media_df):
     real moov tree (``mp4.parse_mp4_meta``).  Map-side only."""
     from .mp4 import parse_mp4_meta
 
-    def work(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = [parse_mp4_meta(bytes(pl)) for pl in pdf["payload"]]
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "n_tracks": pd.Series(
-                        [m["n_tracks"] for m in rows], dtype="int64"),
-                    "duration_ms": pd.Series(
-                        [m["duration"] * 1000 // m["timescale"]
-                         for m in rows], dtype="int64"),
-                    "timescale": pd.Series(
-                        [m["timescale"] for m in rows], dtype="int64"),
-                    "video_codec": [m["video_codec"] for m in rows],
-                    "width": pd.Series(
-                        [m["width"] for m in rows], dtype="int64"),
-                    "height": pd.Series(
-                        [m["height"] for m in rows], dtype="int64"),
-                    "v_samples": pd.Series(
-                        [m["v_samples"] for m in rows], dtype="int64"),
-                    "audio_codec": [m["audio_codec"] for m in rows],
-                    "a_frames": pd.Series(
-                        [m["a_samples"] for m in rows], dtype="int64"),
-                }
-            )
+    def row(mid, pl):
+        m = parse_mp4_meta(bytes(pl))
+        return (mid, m["n_tracks"], m["duration"] * 1000 // m["timescale"],
+                m["timescale"], m["video_codec"], m["width"], m["height"],
+                m["v_samples"], m["audio_codec"], m["a_samples"])
 
-    return media_df.mapInPandas(work, MP4_META_SCHEMA)
+    return _map_rows(media_df, ("media_id", "payload"), row, MP4_META_SCHEMA)
 
 
 def extract_mp3_meta(media_df):
@@ -529,31 +425,15 @@ def extract_mp3_meta(media_df):
     frame bytes (``mp3.parse_mp3_meta``).  Map-side only."""
     from .mp3 import SAMPLES_PER_FRAME_V1L3, parse_mp3_meta
 
-    def work(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = [parse_mp3_meta(bytes(pl)) for pl in pdf["payload"]]
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "sample_rate": pd.Series(
-                        [m["sample_rate"] for m in rows], dtype="int64"),
-                    "bitrate_kbps": pd.Series(
-                        [m["bitrate_kbps"] for m in rows], dtype="int64"),
-                    "n_frames": pd.Series(
-                        [m["n_frames"] for m in rows], dtype="int64"),
-                    "n_samples": pd.Series(
-                        [m["n_samples"] for m in rows], dtype="int64"),
-                    "duration_ms": pd.Series(
-                        [m["n_frames"] * SAMPLES_PER_FRAME_V1L3 * 1000
-                         // m["sample_rate"] for m in rows], dtype="int64"),
-                    "stream_bytes": pd.Series(
-                        [m["stream_bytes"] for m in rows], dtype="int64"),
-                    "has_id3": pd.Series(
-                        [m["has_id3"] for m in rows], dtype="bool"),
-                }
-            )
+    def row(mid, pl):
+        m = parse_mp3_meta(bytes(pl))
+        return (mid, m["sample_rate"], m["bitrate_kbps"], m["n_frames"],
+                m["n_samples"],
+                m["n_frames"] * SAMPLES_PER_FRAME_V1L3 * 1000
+                // m["sample_rate"],
+                m["stream_bytes"], m["has_id3"])
 
-    return media_df.mapInPandas(work, MP3_META_SCHEMA)
+    return _map_rows(media_df, ("media_id", "payload"), row, MP3_META_SCHEMA)
 
 
 H264_META_SCHEMA = (
@@ -578,42 +458,20 @@ def h264_media_table(spark, sf_dir: str):
     pure functions of (text length, md5(text)) so a SQL oracle
     recomputes the NAL census and SPS-parsed dimensions exactly while
     each payload is a real stream an external NAL walker parses."""
-    import hashlib
-
     from .h264 import encode_annexb
 
-    docs = load_table(spark, sf_dir, "documents").select(
-        "doc_id", "text"
-    )
+    def encode(did, n, h):
+        return "video", encode_annexb(
+            width=(h[2] % 64 + 16) * 2,
+            height=(h[3] % 36 + 9) * 2,
+            profile_idc=66 if did % 2 == 0 else 100,
+            level_idc=_H264_LEVELS[h[6] % 7],
+            n_nonidr=n % 24,
+            sei_uuid=h if h[4] % 2 == 0 else None,
+            fill=h[5],
+        )
 
-    def build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, types, payloads = [], [], []
-            for did, text in zip(pdf["doc_id"], pdf["text"]):
-                n = len(text)
-                h = hashlib.md5(text.encode()).digest()
-                ids.append(did)
-                types.append("video")
-                payloads.append(encode_annexb(
-                    width=(h[2] % 64 + 16) * 2,
-                    height=(h[3] % 36 + 9) * 2,
-                    profile_idc=66 if did % 2 == 0 else 100,
-                    level_idc=_H264_LEVELS[h[6] % 7],
-                    n_nonidr=n % 24,
-                    sei_uuid=h if h[4] % 2 == 0 else None,
-                    fill=h[5],
-                ))
-            yield pd.DataFrame(
-                {
-                    "media_id": pd.Series(ids, dtype="int64"),
-                    "media_type": types,
-                    "payload": payloads,
-                }
-            )
-
-    return docs.mapInPandas(
-        build, "media_id BIGINT, media_type STRING, payload BINARY"
-    )
+    return _synth_media(spark, sf_dir, encode)
 
 
 def extract_h264_meta(media_df):
@@ -623,31 +481,12 @@ def extract_h264_meta(media_df):
     Map-side only."""
     from .h264 import parse_annexb_meta
 
-    def work(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = [parse_annexb_meta(bytes(pl)) for pl in pdf["payload"]]
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "n_nals": pd.Series(
-                        [m["n_nals"] for m in rows], dtype="int64"),
-                    "n_slices": pd.Series(
-                        [m["n_idr"] + m["n_nonidr"] for m in rows],
-                        dtype="int64"),
-                    "n_sei": pd.Series(
-                        [m["n_sei"] for m in rows], dtype="int64"),
-                    "profile_idc": pd.Series(
-                        [m["profile_idc"] for m in rows], dtype="int64"),
-                    "level_idc": pd.Series(
-                        [m["level_idc"] for m in rows], dtype="int64"),
-                    "width": pd.Series(
-                        [m["width"] for m in rows], dtype="int64"),
-                    "height": pd.Series(
-                        [m["height"] for m in rows], dtype="int64"),
-                }
-            )
+    def row(mid, pl):
+        m = parse_annexb_meta(bytes(pl))
+        return (mid, m["n_nals"], m["n_idr"] + m["n_nonidr"], m["n_sei"],
+                m["profile_idc"], m["level_idc"], m["width"], m["height"])
 
-    return media_df.mapInPandas(work, H264_META_SCHEMA)
+    return _map_rows(media_df, ("media_id", "payload"), row, H264_META_SCHEMA)
 
 
 def aac_media_table(spark, sf_dir: str):
@@ -657,42 +496,20 @@ def aac_media_table(spark, sf_dir: str):
     third doc_id carries an ID3v2.4 tag the walk must skip.  Metadata
     is closed-form for the SQL oracle; the payload is a real stream
     any ADTS walker parses."""
-    import hashlib
-
     from .aac import encode_adts
 
-    docs = load_table(spark, sf_dir, "documents").select(
-        "doc_id", "text"
-    )
+    def encode(did, n, h):
+        return "audio", encode_adts(
+            profile_bits=h[1] % 4,
+            freq_idx=5 if h[2] % 2 == 0 else 8,
+            channels=h[3] % 2 + 1,
+            n_frames=n % 50 + 4,
+            payload_len=h[4] % 200 + 30,
+            fill=h[5],
+            id3_pad=(h[6] % 100 + 12) if did % 3 == 0 else 0,
+        )
 
-    def build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, types, payloads = [], [], []
-            for did, text in zip(pdf["doc_id"], pdf["text"]):
-                n = len(text)
-                h = hashlib.md5(text.encode()).digest()
-                ids.append(did)
-                types.append("audio")
-                payloads.append(encode_adts(
-                    profile_bits=h[1] % 4,
-                    freq_idx=5 if h[2] % 2 == 0 else 8,
-                    channels=h[3] % 2 + 1,
-                    n_frames=n % 50 + 4,
-                    payload_len=h[4] % 200 + 30,
-                    fill=h[5],
-                    id3_pad=(h[6] % 100 + 12) if did % 3 == 0 else 0,
-                ))
-            yield pd.DataFrame(
-                {
-                    "media_id": pd.Series(ids, dtype="int64"),
-                    "media_type": types,
-                    "payload": payloads,
-                }
-            )
-
-    return docs.mapInPandas(
-        build, "media_id BIGINT, media_type STRING, payload BINARY"
-    )
+    return _synth_media(spark, sf_dir, encode)
 
 
 def extract_aac_meta(media_df):
@@ -702,32 +519,72 @@ def extract_aac_meta(media_df):
     Map-side only."""
     from .aac import SAMPLES_PER_FRAME, parse_adts_meta
 
-    def work(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = [parse_adts_meta(bytes(pl)) for pl in pdf["payload"]]
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "profile": [m["profile"] for m in rows],
-                    "sample_rate": pd.Series(
-                        [m["sample_rate"] for m in rows], dtype="int64"),
-                    "channels": pd.Series(
-                        [m["channels"] for m in rows], dtype="int64"),
-                    "n_frames": pd.Series(
-                        [m["n_frames"] for m in rows], dtype="int64"),
-                    "n_samples": pd.Series(
-                        [m["n_samples"] for m in rows], dtype="int64"),
-                    "duration_ms": pd.Series(
-                        [m["n_frames"] * SAMPLES_PER_FRAME * 1000
-                         // m["sample_rate"] for m in rows], dtype="int64"),
-                    "stream_bytes": pd.Series(
-                        [m["stream_bytes"] for m in rows], dtype="int64"),
-                    "has_id3": pd.Series(
-                        [m["has_id3"] for m in rows], dtype="bool"),
-                }
-            )
+    def row(mid, pl):
+        m = parse_adts_meta(bytes(pl))
+        return (mid, m["profile"], m["sample_rate"], m["channels"],
+                m["n_frames"], m["n_samples"],
+                m["n_frames"] * SAMPLES_PER_FRAME * 1000 // m["sample_rate"],
+                m["stream_bytes"], m["has_id3"])
 
-    return media_df.mapInPandas(work, AAC_META_SCHEMA)
+    return _map_rows(media_df, ("media_id", "payload"), row, AAC_META_SCHEMA)
+
+
+def _sniff_format(pl: bytes):
+    """The magic-byte sniff ladder: the container format of ``pl``
+    (``bmp``, ``wav``, ``jpeg``, ``png``, ``gif``, ``mp4``, ``mp3``),
+    or None."""
+    if pl[:2] == b"BM":
+        return "bmp"
+    if pl[:4] == b"RIFF" and pl[8:12] == b"WAVE":
+        return "wav"
+    if pl[:2] == b"\xff\xd8":
+        return "jpeg"
+    if pl[:8] == b"\x89PNG\r\n\x1a\n":
+        return "png"
+    if pl[:6] in (b"GIF87a", b"GIF89a"):
+        return "gif"
+    if len(pl) >= 12 and pl[4:8] == b"ftyp":
+        return "mp4"
+    if pl[:3] == b"ID3" or (
+        len(pl) >= 4 and pl[0] == 0xFF and pl[1] & 0xE0 == 0xE0
+    ):
+        return "mp3"
+    return None
+
+
+def _decode_real(pl: bytes) -> tuple:
+    """One sniffed payload -> (format, width, height, n_units,
+    level_sum), the ``REAL_DECODED_SCHEMA`` columns after ``media_id``:
+    images give pixels and the channel-byte sum, WAV/MP3 the rate as
+    width and the sample count, MP4 its dimensions, total samples and
+    duration in ms."""
+    from .gif import decode_gif
+    from .jpeg import decode_jpeg_baseline
+    from .mp3 import parse_mp3_meta
+    from .mp4 import parse_mp4_meta
+    from .png import decode_png
+
+    fmt = _sniff_format(pl)
+    images = {"bmp": decode_bmp24, "jpeg": decode_jpeg_baseline,
+              "png": decode_png, "gif": decode_gif}
+    if fmt in images:
+        return (fmt, *images[fmt](pl))
+    if fmt == "wav":
+        rate, ns, s = decode_wav_pcm16(pl)
+        return fmt, rate, 0, ns, s
+    if fmt == "mp4":
+        m = parse_mp4_meta(pl)
+        return (fmt, m["width"], m["height"], m["v_samples"] + m["a_samples"],
+                m["duration"] * 1000 // m["timescale"])
+    if fmt == "mp3":
+        m = parse_mp3_meta(pl)
+        return fmt, m["sample_rate"], 0, m["n_samples"], m["stream_bytes"]
+    raise NotImplementedError(
+        "unrecognized media container: BMP, WAV, JPEG "
+        "(baseline + progressive), PNG, GIF, MP4 "
+        "(box-walk), and MP3 (frame-walk) are the "
+        "implemented sniffable formats"
+    )
 
 
 def decode_media_real(media_df):
@@ -739,87 +596,9 @@ def decode_media_real(media_df):
     via ``mp4.py``/``mp3.py`` (metadata-true; perceptual sample decode
     is the one remaining genuinely-library-bound layer, documented in
     those modules)."""
-    from .gif import decode_gif
-    from .jpeg import decode_jpeg_baseline
-    from .mp3 import parse_mp3_meta
-    from .mp4 import parse_mp4_meta
-    from .png import decode_png
-
-    def parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            fmts, ws, hs, units, sums = [], [], [], [], []
-            for pl in pdf["payload"]:
-                pl = bytes(pl)
-                if pl[:2] == b"BM":
-                    w, hh, npix, s = decode_bmp24(pl)
-                    fmts.append("bmp")
-                    ws.append(w)
-                    hs.append(hh)
-                    units.append(npix)
-                    sums.append(s)
-                elif pl[:4] == b"RIFF" and pl[8:12] == b"WAVE":
-                    rate, ns, s = decode_wav_pcm16(pl)
-                    fmts.append("wav")
-                    ws.append(rate)
-                    hs.append(0)
-                    units.append(ns)
-                    sums.append(s)
-                elif pl[:2] == b"\xff\xd8":
-                    w, hh, npix, s = decode_jpeg_baseline(pl)
-                    fmts.append("jpeg")
-                    ws.append(w)
-                    hs.append(hh)
-                    units.append(npix)
-                    sums.append(s)
-                elif pl[:8] == b"\x89PNG\r\n\x1a\n":
-                    w, hh, npix, s = decode_png(pl)
-                    fmts.append("png")
-                    ws.append(w)
-                    hs.append(hh)
-                    units.append(npix)
-                    sums.append(s)
-                elif pl[:6] in (b"GIF87a", b"GIF89a"):
-                    w, hh, npix, s = decode_gif(pl)
-                    fmts.append("gif")
-                    ws.append(w)
-                    hs.append(hh)
-                    units.append(npix)
-                    sums.append(s)
-                elif len(pl) >= 12 and pl[4:8] == b"ftyp":
-                    m = parse_mp4_meta(pl)
-                    fmts.append("mp4")
-                    ws.append(m["width"])
-                    hs.append(m["height"])
-                    units.append(m["v_samples"] + m["a_samples"])
-                    sums.append(m["duration"] * 1000 // m["timescale"])
-                elif pl[:3] == b"ID3" or (
-                    len(pl) >= 4 and pl[0] == 0xFF and pl[1] & 0xE0 == 0xE0
-                ):
-                    m = parse_mp3_meta(pl)
-                    fmts.append("mp3")
-                    ws.append(m["sample_rate"])
-                    hs.append(0)
-                    units.append(m["n_samples"])
-                    sums.append(m["stream_bytes"])
-                else:
-                    raise NotImplementedError(
-                        "unrecognized media container: BMP, WAV, JPEG "
-                        "(baseline + progressive), PNG, GIF, MP4 "
-                        "(box-walk), and MP3 (frame-walk) are the "
-                        "implemented sniffable formats"
-                    )
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "format": fmts,
-                    "width": pd.Series(ws, dtype="int32"),
-                    "height": pd.Series(hs, dtype="int32"),
-                    "n_units": pd.Series(units, dtype="int64"),
-                    "level_sum": pd.Series(sums, dtype="int64"),
-                }
-            )
-
-    return media_df.mapInPandas(parse, REAL_DECODED_SCHEMA)
+    return _map_rows(media_df, ("media_id", "payload"),
+                     lambda mid, pl: (mid, *_decode_real(bytes(pl))),
+                     REAL_DECODED_SCHEMA)
 
 
 def resize_bmp_nearest(payload: bytes, out_w: int, out_h: int) -> bytes:
@@ -865,21 +644,8 @@ def decimate_wav(payload: bytes, factor: int = 2) -> bytes:
     sample and divide the declared rate — decimation without filtering,
     exact integer semantics (an anti-aliasing filter is a float DSP
     choice layered on top; the container surgery is the same)."""
-    import numpy as np
-
-    rate, _n, _s = decode_wav_pcm16(payload)
-    import struct
-
-    # locate the data chunk again to extract raw samples
-    pos = 12
-    data = None
-    while pos + 8 <= len(payload):
-        cid, sz = struct.unpack_from("<4sI", payload, pos)
-        if cid == b"data":
-            data = payload[pos + 8 : pos + 8 + sz]
-        pos += 8 + sz + (sz % 2)
-    samples = np.frombuffer(data, np.int16)[::factor]
-    return encode_wav_pcm16(rate // factor, samples.tolist())
+    rate, samples = _wav_pcm16_samples(payload)
+    return encode_wav_pcm16(rate // factor, samples[::factor].tolist())
 
 
 def resize_media_real(media_df, out_w: int = 8, out_h: int = 6,
@@ -889,45 +655,21 @@ def resize_media_real(media_df, out_w: int = 8, out_h: int = 6,
     with the same real parsers so the output row proves the resized
     container is still well-formed.  Compressed formats raise inside
     the per-format functions (the honest env gap)."""
+    resizers = {"bmp": lambda pl: resize_bmp_nearest(pl, out_w, out_h),
+                "wav": lambda pl: decimate_wav(pl, factor)}
 
-    def work(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            fmts, ws, hs, units, sums = [], [], [], [], []
-            for pl in pdf["payload"]:
-                pl = bytes(pl)
-                if pl[:2] == b"BM":
-                    rp = resize_bmp_nearest(pl, out_w, out_h)
-                    w, hh, npix, s = decode_bmp24(rp)
-                    fmts.append("bmp")
-                    ws.append(w)
-                    hs.append(hh)
-                    units.append(npix)
-                    sums.append(s)
-                elif pl[:4] == b"RIFF" and pl[8:12] == b"WAVE":
-                    rp = decimate_wav(pl, factor)
-                    rate, ns, s = decode_wav_pcm16(rp)
-                    fmts.append("wav")
-                    ws.append(rate)
-                    hs.append(0)
-                    units.append(ns)
-                    sums.append(s)
-                else:
-                    raise NotImplementedError(
-                        "compressed media formats require codec libraries "
-                        "not present in this environment"
-                    )
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "format": fmts,
-                    "width": pd.Series(ws, dtype="int32"),
-                    "height": pd.Series(hs, dtype="int32"),
-                    "n_units": pd.Series(units, dtype="int64"),
-                    "level_sum": pd.Series(sums, dtype="int64"),
-                }
+    def row(mid, pl):
+        pl = bytes(pl)
+        resize = resizers.get(_sniff_format(pl))
+        if resize is None:
+            raise NotImplementedError(
+                "compressed media formats require codec libraries "
+                "not present in this environment"
             )
+        return (mid, *_decode_real(resize(pl)))
 
-    return media_df.mapInPandas(work, REAL_DECODED_SCHEMA)
+    return _map_rows(media_df, ("media_id", "payload"), row,
+                     REAL_DECODED_SCHEMA)
 
 
 def _fake_parse(media_type: str, payload: bytes) -> tuple[str, int, int, int]:
@@ -939,39 +681,13 @@ def _fake_parse(media_type: str, payload: bytes) -> tuple[str, int, int, int]:
     return _FORMATS[media_type], width, height, n
 
 
-def decode_media(media_df, real: bool = False):
-    """Binary payload -> typed metadata via ``mapInPandas``.
-
-    ``real=True`` is the integration point for actual codecs (PIL,
-    soundfile, ffmpeg): not available in this container."""
-
-    def parse_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        if real:
-            # STUB: real decoding needs image/audio libraries that are not
-            # installed here.  Plug `PIL.Image.open(io.BytesIO(payload))`
-            # (etc.) into this branch on a cluster that has them.
-            raise NotImplementedError(
-                "real media decoding requires codec libraries not present "
-                "in this environment; use real=False for the deterministic "
-                "fake parser"
-            )
-        for pdf in batches:
-            parsed = [
-                _fake_parse(mt, pl)
-                for mt, pl in zip(pdf["media_type"], pdf["payload"])
-            ]
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "media_type": pdf["media_type"],
-                    "format": [p[0] for p in parsed],
-                    "width": pd.Series([p[1] for p in parsed], dtype="int32"),
-                    "height": pd.Series([p[2] for p in parsed], dtype="int32"),
-                    "n_bytes": pd.Series([p[3] for p in parsed], dtype="int32"),
-                }
-            )
-
-    return media_df.mapInPandas(parse_batches, DECODED_SCHEMA)
+def decode_media(media_df):
+    """Binary payload -> typed metadata via ``mapInPandas``: the
+    deterministic fake header parse, recomputable from the byte length
+    by a SQL oracle.  Real codecs decode in ``decode_media_real``."""
+    return _map_rows(media_df, ("media_id", "media_type", "payload"),
+                     lambda mid, mt, pl: (mid, mt, *_fake_parse(mt, pl)),
+                     DECODED_SCHEMA)
 
 
 def sample_frames(media_df, stride: int = 256):
@@ -998,40 +714,18 @@ def sample_frames(media_df, stride: int = 256):
     return media_df.mapInPandas(slice_batches, FRAME_SCHEMA)
 
 
-def resize_media(media_df, target_bytes: int = 4096, real: bool = False):
-    """Resize: payload -> fixed-size payload (truncate / cycle-pad), with
-    the real-codec branch (PIL thumbnail / ffmpeg scale) stubbed exactly
-    like ``decode_media``.  Map-side only; output schema == input schema
-    plus ``orig_bytes`` so the pipeline stays re-entrant."""
+def resize_media(media_df, target_bytes: int = 4096):
+    """Resize: payload -> fixed-size payload (truncate / cycle-pad); the
+    real decode-resample-encode path is ``resize_media_real``.
+    Map-side only; output schema == input schema plus ``orig_bytes`` so
+    the pipeline stays re-entrant."""
 
-    def resize_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        if real:
-            # STUB: a real implementation decodes, rescales pixels/samples,
-            # and re-encodes; codec libraries are not in this container.
-            raise NotImplementedError(
-                "real media resizing requires codec libraries not present "
-                "in this environment; use real=False for byte-level resize"
-            )
-        for pdf in batches:
-            out_payloads, orig = [], []
-            for pl in pdf["payload"]:
-                orig.append(len(pl))
-                if len(pl) >= target_bytes:
-                    out_payloads.append(bytes(pl[:target_bytes]))
-                else:
-                    reps = -(-target_bytes // max(len(pl), 1))
-                    out_payloads.append(bytes((pl * reps)[:target_bytes]))
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "media_type": pdf["media_type"],
-                    "payload": out_payloads,
-                    "orig_bytes": pd.Series(orig, dtype="int32"),
-                }
-            )
+    def row(mid, mt, pl):
+        reps = -(-target_bytes // max(len(pl), 1))
+        return mid, mt, bytes((pl * reps)[:target_bytes]), len(pl)
 
-    return media_df.mapInPandas(
-        resize_batches,
+    return _map_rows(
+        media_df, ("media_id", "media_type", "payload"), row,
         "media_id BIGINT, media_type STRING, payload BINARY, orig_bytes INT",
     )
 
@@ -1071,65 +765,28 @@ def wav_am_media_table(spark, sf_dir: str, n_segments: int = 16,
     CLIPPED segment).  Amplitudes are pure functions of md5(text), so
     a SQL oracle recomputes every segment energy exactly while the
     payload is a real WAV any audio tool opens."""
-    import hashlib
 
-    docs = load_table(spark, sf_dir, "documents").select(
-        "doc_id", "text"
-    )
+    def encode(did, n, h):
+        samples: list[int] = []
+        for s in range(n_segments):
+            amp = min(32767, (h[s] % 33) * 1024)
+            samples += [amp if i % 2 == 0 else -amp for i in range(seg_len)]
+        return "audio", encode_wav_pcm16(8000, samples)
 
-    def build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, types, payloads = [], [], []
-            for did, text in zip(pdf["doc_id"], pdf["text"]):
-                h = hashlib.md5(text.encode()).digest()
-                samples: list[int] = []
-                for s in range(n_segments):
-                    amp = min(32767, (h[s] % 33) * 1024)
-                    for i in range(seg_len):
-                        samples.append(amp if i % 2 == 0 else -amp)
-                ids.append(did)
-                types.append("audio")
-                payloads.append(encode_wav_pcm16(8000, samples))
-            yield pd.DataFrame(
-                {"media_id": ids, "media_type": types, "payload": payloads}
-            )
-
-    return docs.mapInPandas(
-        build, "media_id LONG, media_type STRING, payload BINARY"
-    )
+    return _synth_media(spark, sf_dir, encode)
 
 
 def decode_wav_energy_segments(payload: bytes, n_segments: int = 16):
-    """Per-segment energy walk over a REAL mono PCM-16 WAV: RIFF chunk
-    walk (fmt may precede data with LIST/fact in between), then the
-    sample stream splits into ``n_segments`` equal windows, each
-    reporting the exact int64 sum of squared samples plus whether any
-    sample saturates at full scale (|s| == 32767).  Returns
+    """Per-segment energy walk over a REAL mono PCM-16 WAV: the RIFF
+    chunk walk ``_wav_pcm16_samples``, then the sample stream splits
+    into ``n_segments`` equal windows, each reporting the exact int64
+    sum of squared samples plus whether any sample saturates at full
+    scale (|s| == 32767).  Returns
     (energies, n_silent, n_clipped, n_samples)."""
-    import struct
-
     import numpy as np
 
-    if payload[:4] != b"RIFF" or payload[8:12] != b"WAVE":
-        raise ValueError("not a WAV payload")
-    pos, rate, data = 12, None, None
-    while pos + 8 <= len(payload):
-        cid, sz = struct.unpack_from("<4sI", payload, pos)
-        body = payload[pos + 8 : pos + 8 + sz]
-        if cid == b"fmt ":
-            fmt_code, channels, rate = struct.unpack_from("<HHI", body, 0)
-            bits = struct.unpack_from("<H", body, 14)[0]
-            if fmt_code != 1 or bits != 16 or channels != 1:
-                raise NotImplementedError(
-                    "non-PCM / multi-channel WAV decoding requires a "
-                    "codec library not present in this environment"
-                )
-        elif cid == b"data":
-            data = body
-        pos += 8 + sz + (sz % 2)
-    if rate is None or data is None:
-        raise ValueError("WAV missing fmt or data chunk")
-    samples = np.frombuffer(data, np.int16).astype(np.int64)
+    _rate, samples = _wav_pcm16_samples(payload)
+    samples = samples.astype(np.int64)
     if len(samples) % n_segments:
         raise ValueError("sample count not divisible into segments")
     seg = len(samples) // n_segments
@@ -1148,34 +805,14 @@ def extract_audio_qa(media_df, n_segments: int = 16):
     silent segments, zero clipped) — the audio-pretraining gate shape.
     Map-side only."""
 
-    def work(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {"media_id": [], "n_samples": [], "n_silent": [],
-                   "n_clipped": [], "total_energy": [], "max_energy": [],
-                   "keep": []}
-            for mid, pl in zip(pdf["media_id"], pdf["payload"]):
-                energies, n_silent, n_clipped, ns = (
-                    decode_wav_energy_segments(bytes(pl), n_segments))
-                out["media_id"].append(mid)
-                out["n_samples"].append(ns)
-                out["n_silent"].append(n_silent)
-                out["n_clipped"].append(n_clipped)
-                out["total_energy"].append(sum(energies))
-                out["max_energy"].append(max(energies))
-                out["keep"].append(n_silent <= 4 and n_clipped == 0)
-            yield pd.DataFrame({
-                "media_id": pd.Series(out["media_id"], dtype="int64"),
-                "n_samples": pd.Series(out["n_samples"], dtype="int64"),
-                "n_silent": pd.Series(out["n_silent"], dtype="int64"),
-                "n_clipped": pd.Series(out["n_clipped"], dtype="int64"),
-                "total_energy": pd.Series(
-                    out["total_energy"], dtype="int64"),
-                "max_energy": pd.Series(out["max_energy"], dtype="int64"),
-                "keep": pd.Series(out["keep"], dtype="bool"),
-            })
+    def row(mid, pl):
+        energies, n_silent, n_clipped, ns = (
+            decode_wav_energy_segments(bytes(pl), n_segments))
+        return (mid, ns, n_silent, n_clipped, sum(energies), max(energies),
+                n_silent <= 4 and n_clipped == 0)
 
-    return media_df.mapInPandas(
-        work,
+    return _map_rows(
+        media_df, ("media_id", "payload"), row,
         "media_id BIGINT, n_samples BIGINT, n_silent BIGINT, "
         "n_clipped BIGINT, total_energy BIGINT, max_energy BIGINT, "
         "keep BOOLEAN",

@@ -12,8 +12,10 @@ register folded into that narrower form, a fourth keeps every read
 of a testdata table on ``sources/tables.py``'s loaders, a fifth keeps
 stream staging, the foreachBatch run and the version-pointer store in
 their one helper each, a sixth keeps every directory the engine
-writes on ``plans/tmpstore.py``, and a seventh keeps the ``operators``
-package free of submodule imports.
+writes on ``plans/tmpstore.py``, a seventh keeps the ``operators``
+package free of submodule imports, and an eighth keeps the media
+family's payload synthesis, per-row ``mapInPandas`` and RIFF walk in
+their one helper each.
 """
 
 import ast
@@ -207,6 +209,39 @@ def test_stream_idioms_live_in_their_helpers():
     assert not hits, (
         "stage through staging.stage_slices and run foreachBatch streams "
         f"through sinks.run_foreach_batch / publish_version: {hits}"
+    )
+
+
+# The one site of each media idiom in ``operators/multimodal.py``: the
+# md5-of-text seed (synthesizer), the RIFF chunk unpack (WAV walker) and
+# ``mapInPandas`` (row mapper, plus the ``sample_frames`` explode).
+_MEDIA_HELPERS = {"_synth_media", "_wav_pcm16_samples", "_map_rows",
+                  "sample_frames"}
+_MEDIA_IDIOMS = re.compile(
+    r"md5\(text\.encode\(\)\)|\"<4sI\"|\.mapInPandas\(")
+
+
+def test_media_idioms_live_in_their_helpers():
+    """Outside its helpers ``operators/multimodal.py`` seeds no payload
+    from ``md5(text)``, walks no RIFF chunk and calls no
+    ``mapInPandas``: a media table is an ``encode`` given to
+    ``_synth_media``, a decoder a row function given to ``_map_rows``,
+    and every WAV reader goes through ``_wav_pcm16_samples`` (nine
+    builders, nine per-row decoders and three chunk walks had each
+    carried a copy)."""
+    path = os.path.join(REPO, "duckdb_title_mapper_spark", "operators",
+                        "multimodal.py")
+    with open(path) as f:
+        src = f.read()
+    spans = [(n.lineno, n.end_lineno)
+             for n in ast.parse(src, filename=path).body
+             if isinstance(n, ast.FunctionDef) and n.name in _MEDIA_HELPERS]
+    hits = [i for i, line in enumerate(src.splitlines(), 1)
+            if _MEDIA_IDIOMS.search(line)
+            and not any(a <= i <= b for a, b in spans)]
+    assert not hits, (
+        "synthesize through _synth_media, decode through _map_rows and "
+        f"walk RIFF through _wav_pcm16_samples: multimodal.py lines {hits}"
     )
 
 

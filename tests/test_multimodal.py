@@ -1,7 +1,6 @@
 """Multimodal plumbing: binary payload schema, mapInPandas decode, frame
-sampling shapes, feature vectors, and the real-codec stub gate."""
+sampling shapes and feature vectors."""
 
-import pytest
 from pyspark.sql import functions as F
 
 from duckdb_title_mapper_spark.operators.multimodal import (
@@ -38,15 +37,6 @@ def test_decode_media_fake_parser(spark):
     assert decoded.count() == media.count()
 
 
-def test_decode_media_real_is_stubbed(spark):
-    media = media_table(spark, SF).limit(1)
-    with pytest.raises(Exception) as exc:
-        decode_media(media, real=True).collect()
-    assert "NotImplementedError" in str(exc.value) or isinstance(
-        exc.value, NotImplementedError
-    )
-
-
 def test_sample_frames_slices(spark):
     media = media_table(spark, SF).where("media_id < 20")
     frames = sample_frames(media, stride=100)
@@ -73,17 +63,6 @@ def test_resize_media_fixed_size(spark):
     for r in rows:
         assert len(r["payload"]) == 128
         assert r["orig_bytes"] == src_lens[r["media_id"]]
-
-
-def test_resize_media_real_is_stubbed(spark):
-    from duckdb_title_mapper_spark.operators.multimodal import resize_media
-
-    media = media_table(spark, SF).limit(1)
-    with pytest.raises(Exception) as exc:
-        resize_media(media, real=True).collect()
-    assert "NotImplementedError" in str(exc.value) or isinstance(
-        exc.value, NotImplementedError
-    )
 
 
 def test_extract_features_normalized(spark):

@@ -3,12 +3,11 @@ value-compare in test_oracle_parity), starting with the streaming
 image-dedup at-least-once retry contract the r10 advice flagged."""
 
 import os
-import tempfile
 
 SF = "/root/testdata/sf0.001"
 
 
-def test_image_dedup_batch_retry_is_idempotent(spark):
+def test_image_dedup_batch_retry_is_idempotent(spark, tmp_path):
     """foreachBatch retry contract: re-running a batch whose
     ``bands.b{id}`` dir was already written (attempt crashed after
     the bands write, before the checkpoint commit) must rewrite
@@ -26,7 +25,7 @@ def test_image_dedup_batch_retry_is_idempotent(spark):
     )
     batch0 = docs.where(F.col("doc_id") % 4 == 0)
     batch1 = docs.where(F.col("doc_id") % 4 == 1)
-    out = tempfile.mkdtemp(prefix="dtm_test_imgdedup_retry_")
+    out = str(tmp_path)
 
     def flags(bid):
         rows = spark.read.parquet(

@@ -690,18 +690,32 @@ def test_boruvka_msf_matches_python_replay(spark):
     assert got[4][0] == 1 and got[4][1] == len(nodes) - 1
 
 
-@pytest.mark.parametrize("name", [
+_EMPTY_INPUT_CASES = [("lineitem", n) for n in (
     "x_boruvka_msf", "x_bfs_levels", "x_sssp_bellman",
-    "x_graph_diameter_sweep", "x_temporal_reachability"])
-def test_graph_loop_empty_lineitem_matches_oracle(spark, tmp_path, name):
-    """Degenerate input: a zero-row lineitem gives an empty co-purchase
-    graph, and each graph loop must still return what its oracle
-    returns.  Boruvka reports every round as (r, 0, 0, 0) — the
-    snapshot's ``coalesce(sum(w), 0)`` is on both sides — and its
+    "x_graph_diameter_sweep", "x_temporal_reachability")] + [
+    ("documents", n) for n in (
+        "x_multimodal_meta", "x_multimodal_real_decode",
+        "x_multimodal_real_resize", "x_multimodal_jpeg_decode",
+        "x_multimodal_png_decode", "x_multimodal_gif_decode",
+        "x_media_frame_stats", "x_media_features",
+        "x_multimodal_mp4_meta", "x_multimodal_mp3_meta",
+        "x_media_curation_report", "x_multimodal_h264_nals",
+        "x_multimodal_aac_adts", "x_av_curation_report",
+        "x_audio_qa_gate", "x_multimodal_curation_manifest")]
+
+
+@pytest.mark.parametrize("table,name", _EMPTY_INPUT_CASES)
+def test_empty_input_matches_oracle(spark, tmp_path, table, name):
+    """Degenerate input: with a zero-row ``table`` each query must still
+    return what its oracle returns.  A zero-row lineitem gives an empty
+    co-purchase graph: Boruvka reports every round as (r, 0, 0, 0) —
+    the snapshot's ``coalesce(sum(w), 0)`` is on both sides — and its
     laundered fused-slice unions must run on empty checkpointed
-    relations.  The min-plus loops start from an empty seeded state;
-    the diameter sweep's single row must survive an empty phase-2
-    seed."""
+    relations; the min-plus loops start from an empty seeded state; the
+    diameter sweep's single row must survive an empty phase-2 seed.  A
+    zero-row documents gives every multimodal query an empty media
+    table: the synthesizer and the row mapper must yield typed empty
+    batches, and the media-meta census an empty parquet relation."""
     import os
     import sys
 
@@ -715,10 +729,10 @@ def test_graph_loop_empty_lineitem_matches_oracle(spark, tmp_path, name):
     from check_oracle import canon
 
     for t in w.TABLES:
-        if t != "lineitem":
+        if t != table:
             os.symlink(f"{SF}/{t}.parquet", tmp_path / f"{t}.parquet")
-    lineitem = pq.read_table(f"{SF}/lineitem.parquet")
-    pq.write_table(lineitem.slice(0, 0), tmp_path / "lineitem.parquet")
+    empty = pq.read_table(f"{SF}/{table}.parquet").slice(0, 0)
+    pq.write_table(empty, tmp_path / f"{table}.parquet")
 
     q = w.all_queries()[name]
     sdf = q.spark_fn(spark, str(tmp_path))

@@ -3,15 +3,14 @@ checkpoint + output path must not duplicate rows (the sink's commit log
 plus the source's processed-file log make the rerun a no-op)."""
 
 import os
-import tempfile
 
 SF_DIR = "/root/testdata/sf0.001"
 
 
-def test_file_sink_rerun_is_noop(spark):
+def test_file_sink_rerun_is_noop(spark, tmp_path):
     from duckdb_title_mapper_spark.streaming import stream_events
 
-    out = tempfile.mkdtemp(prefix="dtm_sink_once_")
+    out = str(tmp_path)
     data, chk = os.path.join(out, "data"), os.path.join(out, "chk")
 
     def run():
@@ -33,18 +32,16 @@ def test_file_sink_rerun_is_noop(spark):
     assert n2 == n1
 
 
-def test_bad_csv_permissive_manifest(spark):
+def test_bad_csv_permissive_manifest(spark, tmp_path):
     """Pin the PERMISSIVE-mode parse the src_csv_badrecords oracle
     encodes, line by line (ADVICE r3): current Spark marks a too-short
     row ('5,50') corrupt under an explicit schema — historically short
     rows were null-padded without being flagged.  If a future Spark
     changes parser semantics this fails HERE, pointing at the static
     oracle that then needs re-deriving."""
-    import tempfile
-
     from duckdb_title_mapper_spark.workload import _BAD_CSV_LINES
 
-    d = tempfile.mkdtemp(prefix="dtm_bad_csv_")
+    d = str(tmp_path)
     with open(os.path.join(d, "part-000.csv"), "w") as f:
         f.write("\n".join(_BAD_CSV_LINES) + "\n")
     rows = {
