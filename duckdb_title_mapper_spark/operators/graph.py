@@ -5,10 +5,15 @@ Banded LSH (``dedup.py``, ``workload.x_near_dup_clusters``) emits *pairs*;
 a dedup pipeline needs the transitive groups ("A≈B and B≈C ⇒ one keeper
 for {A,B,C}").  That closure is inherently iterative — no single SQL pass
 computes it — so this is one of the few operators where driver-side
-iteration is the honest Spark shape: min-label propagation, each round a
-join + groupBy (all Catalyst), converging in O(graph diameter) rounds.
-At 100 TB this is the standard large-scale CC recipe (alternating-star
-variants improve the constant; diameters of near-dup graphs are tiny).
+iteration is the honest Spark shape: min-label propagation, all
+Catalyst.  The labels start at each vertex's closed-neighbourhood min
+(one in-plan groupBy over the edges, no join); each round then reads one
+broadcast of the labels three times — neighbour min, own label and the
+pointer jump label(label(x)) — and materializes once, so a graph of
+diameter d converges in O(log d) rounds (the catalog's near-dup graphs
+in one).  At 100 TB this is the standard large-scale CC recipe
+(alternating-star variants improve the constant; diameters of near-dup
+graphs are tiny).
 
 The declared query's DuckDB oracle is a recursive CTE propagating labels
 to a fixpoint — slower asymptotically, but exact, which is the point.
@@ -100,11 +105,14 @@ def min_plus_relax(edges, dist, step: str, inf: int,
 def connected_components(edges_df, src: str = "src", dst: str = "dst",
                          max_iter: int = 25):
     """(vertex, component) for the undirected graph in ``edges_df``;
-    component id = min vertex id in the component.  Deterministic."""
+    component id = min vertex id in the component.  Deterministic.
+    A NULL endpoint is its own vertex with a NULL component."""
     from pyspark.sql import Observation, functions as F
 
     from ..plans.materialize import materialize as _mat, release as _release
 
+    if max_iter < 1:
+        raise ValueError(f"connected_components needs max_iter >= 1, got {max_iter}")
     edges = _mat(
         edges_df.select(F.col(src).alias("a"), F.col(dst).alias("b"))
         .union(edges_df.select(F.col(dst).alias("a"), F.col(src).alias("b")))
@@ -113,55 +121,45 @@ def connected_components(edges_df, src: str = "src", dst: str = "dst",
         # candidate-pair subplan) is consumed every round — without this
         # each iteration re-runs the whole upstream pipeline
     )
-    labels = (
-        edges.select(F.col("a").alias("id"))
-        .distinct()
-        .withColumn("label", F.col("id"))
-    )
+    # seed = one hash-min step on identity labels (the closed-
+    # neighbourhood min): it needs no join, stays lazy, and saves the
+    # round that identity labels would spend reaching it
+    labels = edges.groupBy("a").agg(
+        F.when(F.col("a").isNotNull(), F.least("a", F.min("b"))).alias("label")
+    ).withColumnRenamed("a", "id")
     for _ in range(max_iter):
-        # r15: broadcast the vertex-sized label relation into the
-        # edge-scale join — the static post-checkpoint plan otherwise
-        # sorts the full edge relation every round
-        neighbor_min = (
-            edges.join(_maybe_broadcast(labels), edges.b == labels.id)
-            .groupBy("a")
-            .agg(F.min("label").alias("nmin"))
-        )
-        # r15: POINTER JUMPING rides each round — label(label(x))
+        # every round runs off ONE broadcast of the vertex-sized labels
+        # (mode-gated; the static post-checkpoint plan otherwise sorts
+        # the full edge relation), read three times: the neighbour min,
+        # the vertex's own label and POINTER JUMPING — label(label(x))
         # halves the remaining propagation distance, so long-diameter
-        # graphs converge in O(log d) rounds instead of d (the
-        # dbscan grid graph measured 20 hash-min rounds over 204
-        # cells; jumping cuts it to ~6).  label(x) is always a
-        # same-component vertex id, so the jump join always hits and
-        # the fixpoint (all labels = component min) is unchanged.
-        jump = labels.selectExpr("id AS jid", "label AS jlabel")
+        # graphs converge in O(log d) rounds instead of d.  label(x) is
+        # always a same-component vertex id, so the fixpoint (all labels
+        # = component min) is unchanged.  Left joins keep the vertices
+        # whose only neighbour is NULL and the NULL vertex itself.
+        lab = _maybe_broadcast(labels)
         # convergence flag WITHOUT a probe job: labels only ever
-        # DECREASE (least of old, neighbour min and jumped label), so a
-        # round changed nothing iff no label got smaller.  The
-        # ``count_if`` rides the round's own materialization as an
-        # ``Observation`` (materialize also cuts the otherwise-
-        # exponential lineage growth per round); it holds for any
-        # BIGINT ids, where a label-sum probe would overflow.
+        # DECREASE, so a round changed nothing iff no label got smaller.
+        # The ``count_if`` rides the round's own materialization as an
+        # ``Observation`` (materialize also cuts the lineage growth per
+        # round); it holds for any BIGINT ids, where a label-sum probe
+        # would overflow.
         changes = Observation()
         new_labels = _mat(
-            labels.join(_maybe_broadcast(neighbor_min),
-                        labels.id == neighbor_min.a, "left")
-            .join(_maybe_broadcast(jump), labels.label == F.col("jid"), "left")
+            edges.join(lab.selectExpr("id AS b", "label AS nl"), "b", "left")
+            .groupBy("a").agg(F.min("nl").alias("nmin"))
+            .join(lab.selectExpr("id AS a", "label AS old"), "a", "left")
+            .join(lab.selectExpr("id AS old", "label AS jl"), "old", "left")
             .select(
-                "id",
-                F.col("label").alias("old"),
-                F.least(
-                    F.col("label"),
-                    F.coalesce(F.col("nmin"), F.col("label")),
-                    F.coalesce(F.col("jlabel"), F.col("label")),
-                ).alias("label"),
+                F.col("a").alias("id"), "old",
+                F.when(F.col("a").isNotNull(), F.least("old", "nmin", "jl"))
+                .alias("label"),
             )
             .observe(changes, F.count_if(F.col("label") < F.col("old")).alias("n"))
             .select("id", "label")
         )
         changed = changes.get["n"]
-        if labels is not new_labels:
-            _release(labels)  # retire last round's materialization
+        _release(labels)  # retire last round's materialization
         labels = new_labels
         if changed == 0:
             break
@@ -324,7 +322,8 @@ def kcore_peel_trajectory(edges_df, src: str = "src", dst: str = "dst",
     At 100 TB: per-round cost is one shuffle join on vertex ids (AQE
     skew-split handles hubs); the alive set shrinks monotonically, so
     round cost decays; O(diameter)-bounded variants swap the fixed
-    count for a convergence probe (connected_components pattern).
+    count for a change count observed on each round's materialization
+    (the connected_components ``Observation``).
     """
     from pyspark.sql import functions as F
     from pyspark.sql.window import Window

@@ -113,6 +113,8 @@ def main():
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.driver.memory", jvm_memory())
         .config("spark.ui.enabled", "false")
+        # no \r-separated progress bar in front of the PASS/FAIL lines
+        .config("spark.ui.showConsoleProgress", "false")
         .getOrCreate()
     )
     spark.sparkContext.setLogLevel("ERROR")
